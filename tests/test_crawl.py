@@ -174,9 +174,15 @@ def test_metrics_manifest(spark, crawled):
     assert man["lineage"]["frontier"] == N_EPOCHS - 1
 
 
-def test_resume_after_kill(spark, world, tmp_path_factory, crawled):
-    """Kill mid-epoch (after 3 of 8 commits), rerun, final state identical —
-    and completed epochs are not re-executed (no refetching)."""
+# run_epoch commits pages_state, fetched_images, fetch_log, seen, bloom,
+# then the cascade's index_pages, index_rows, domain_counts, uri_counts,
+# and frontier last: a kill after 3 commits lands before seen, after 5..8
+# before each cascade table, after 9 before frontier
+@pytest.mark.parametrize("kill_after", [3, 5, 6, 7, 8, 9])
+def test_resume_after_kill(spark, world, tmp_path_factory, crawled, kill_after):
+    """Kill mid-epoch (after ``kill_after`` of 10 commits), rerun, final
+    state identical — and completed epochs are not re-executed (no
+    refetching)."""
     corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
     cat_full, _ = crawled
     root = str(tmp_path_factory.mktemp("crawl_kill"))
@@ -186,12 +192,12 @@ def test_resume_after_kill(spark, world, tmp_path_factory, crawled):
     # run 1 epoch cleanly
     frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
 
-    # epoch 2 killed after 3 commits
+    # epoch 2 killed after ``kill_after`` commits
     commits = {"n": 0}
     orig_commit = SnapshotTable.commit
 
     def dying_commit(self, df, **kw):
-        if commits["n"] >= 3:
+        if commits["n"] >= kill_after:
             raise RuntimeError("simulated kill")
         commits["n"] += 1
         return orig_commit(self, df, **kw)
@@ -216,9 +222,16 @@ def test_resume_after_kill(spark, world, tmp_path_factory, crawled):
     assert cat.table("frontier").head() == snap_before + 2
 
     # final state equals the uninterrupted run
-    for t in ("seen", "fetch_log", "uri_counts", "frontier"):
-        a = {tuple(r) for r in cat.table(t).read(spark).collect()}
-        b = {tuple(r) for r in cat_full.table(t).read(spark).collect()}
+    for t in (
+        "seen", "fetch_log", "uri_counts", "frontier",
+        "index_pages", "domain_counts", "index_rows",
+    ):
+        # index_pages carries its outbound_links array: freeze it to hash
+        a, b = (
+            {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+             for r in c.table(t).read(spark).collect()}
+            for c in (cat, cat_full)
+        )
         assert a == b, t
 
 

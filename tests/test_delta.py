@@ -147,7 +147,7 @@ def test_incremental_equals_batch_script(spark):
 def test_anchor_only_change_emits_no_link_delta(spark):
     state = empty_state(spark)
     state = tick(spark, state, puts=[page(P_A, [link("http://b.com/1", "old")])])
-    _, uri_deltas, muts = delta_ops.diff_pages(
+    uri_deltas, muts = delta_ops.diff_pages(
         state[0], deltas_df(spark, puts=[page(P_A, [link("http://b.com/1", "NEW")])])
     )
     assert uri_deltas.count() == 0  # no UriInfo change at all
@@ -171,7 +171,7 @@ def test_reload_same_page_is_noop(spark):
 
 
 def test_domain_changes_feed_is_o_delta_and_exact(spark):
-    """merge_domain_counts(with_changes=True) returns the touched-domain
+    """merge_domain_counts returns the touched-domain
     (old, new) rows the epoch metrics consume; domains_new derived from it
     equals the brute-force old-vs-new domain-set difference."""
     dc = spark.createDataFrame(
@@ -187,7 +187,7 @@ def test_domain_changes_feed_is_o_delta_and_exact(spark):
         "uri string, old_links long, old_docs long, new_links long, "
         "new_docs long, touched boolean",
     )
-    nxt, dchg = delta_ops.merge_domain_counts(dc, changes, with_changes=True)
+    nxt, dchg = delta_ops.merge_domain_counts(dc, changes)
     got_next = {(r["rev_domain"], r["pagecount"]) for r in nxt.collect()}
     assert got_next == {("com.a", 3), ("com.c", 1)}
     rows = {r["rev_domain"]: (r["old_pagecount"], r["new_pagecount"])

@@ -32,15 +32,12 @@ L_Z = link("http://d.com/z", "z")
 def tick(spark, state, puts=(), deletes=()):
     pages, uc, dc, ir = state
     deltas = deltas_df(spark, puts=puts, deletes=deletes)
-    pages_next, uri_deltas, mutations = delta_ops.diff_pages(pages, deltas)
-    uc_next, changes = delta_ops.merge_uri_counts(uc, uri_deltas)
-    changes = changes.cache()
-    dc_next, dom_changes = delta_ops.merge_domain_counts(
-        dc, changes, with_changes=True
+    outputs, feed = delta_ops.cascade(pages, uc, dc, deltas)
+    meters = epoch_meters(*feed)
+    nxt = tuple(
+        delta_ops.reconcile(df, *outputs[t]).localCheckpoint(eager=True)
+        for df, t in zip(state, ("index_pages", "uri_counts", "domain_counts", "index_rows"))
     )
-    ir_next = delta_ops.update_index_rows(ir, changes, dom_changes, mutations)
-    meters = epoch_meters(mutations, changes, dom_changes)
-    nxt = tuple(df.localCheckpoint(eager=True) for df in (pages_next, uc_next, dc_next, ir_next))
     return nxt, meters
 
 

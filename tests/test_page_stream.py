@@ -4,9 +4,11 @@ engine into snapshot tables; restarts and replays are idempotent."""
 
 import os
 
+import pytest
+
 from webindex_spark.operators import index_batch
 from webindex_spark.sources.pages_json import read_pages_json
-from webindex_spark.sources.snapshots import Catalog
+from webindex_spark.sources.snapshots import Catalog, SnapshotTable
 from webindex_spark.streaming import page_stream
 
 
@@ -47,58 +49,107 @@ def test_stream_matches_batch_recompute(spark, tmp_path):
     assert _snap(cat.table("index_rows").read(spark)) == want_rows5
 
 
-def test_partial_crash_replay_recovers_all_tables(spark, tmp_path, monkeypatch):
-    """Crash BETWEEN the four per-table commits of a micro-batch: the
-    replay must re-derive the same deltas (inputs pinned below batch_id,
-    not read at HEAD) and publish the tables the crash skipped — the
-    streamed state still equals a from-scratch batch recompute."""
-    import pytest
-
-    from webindex_spark.sources.snapshots import SnapshotTable
-
+def _two_files(tmp_path):
     fixture = os.path.join(os.path.dirname(__file__), "golden", "5-pages.txt")
     lines = [l for l in open(fixture, encoding="utf-8").read().splitlines() if l]
     f_a, f_b = tmp_path / "a.json", tmp_path / "b.json"
     f_a.write_text("\n".join(lines[:2]) + "\n")
     f_b.write_text("\n".join(lines[2:]) + "\n")
+    return f_a, f_b
 
+
+def _fail_commits(monkeypatch, tables, epoch):
+    """Make the commits of ``tables`` at ``epoch`` die before publishing."""
+    real_commit = SnapshotTable.commit
+
+    def crashing(self, df, **kw):
+        if self.name in tables and kw.get("epoch") == epoch:
+            raise RuntimeError(f"simulated crash between table commits ({self.name})")
+        return real_commit(self, df, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "commit", crashing)
+    return real_commit
+
+
+def _assert_equals_batch(spark, cat, pages):
+    want_uc, want_dc, want_rows = (
+        _snap(d) for d in index_batch.build_index(pages, cache=False)
+    )
+    assert _snap(cat.table("uri_counts").read(spark)) == want_uc
+    assert _snap(cat.table("domain_counts").read(spark)) == want_dc
+    assert _snap(cat.table("index_rows").read(spark)) == want_rows
+
+
+@pytest.mark.parametrize("crashed", page_stream.STREAM_TABLES)
+def test_partial_crash_replay_recovers_all_tables(spark, tmp_path, monkeypatch, crashed):
+    """Crash BETWEEN the four per-table commits of a micro-batch: the
+    replay must re-derive the same deltas (inputs pinned below batch_id,
+    not read at HEAD) and publish the tables the crash skipped — the
+    streamed state still equals a from-scratch batch recompute."""
+    f_a, f_b = _two_files(tmp_path)
     cat = Catalog(str(tmp_path / "cat"))
     page_stream._empty_state(spark, cat)
     page_stream.apply_page_batch(
         spark, cat, read_pages_json(spark, str(f_a)), batch_id=0
     )
 
-    # batch 1's uri_counts commit dies BEFORE publishing while the other
+    # batch 1's ``crashed`` commit dies BEFORE publishing while the other
     # three tables (committed concurrently) publish: the most dangerous
     # partial state — replay must pin its reads BELOW batch 1 even though
     # those tables' HEADs already sit AT batch 1
-    real_commit = SnapshotTable.commit
-
-    def crashing(self, df, **kw):
-        if self.name == "uri_counts" and kw.get("epoch") == 1:
-            raise RuntimeError("simulated crash between table commits")
-        return real_commit(self, df, **kw)
-
-    monkeypatch.setattr(SnapshotTable, "commit", crashing)
+    real_commit = _fail_commits(monkeypatch, {crashed}, epoch=1)
     with pytest.raises(RuntimeError, match="simulated crash"):
         page_stream.apply_page_batch(
             spark, cat, read_pages_json(spark, str(f_b)), batch_id=1
         )
     monkeypatch.setattr(SnapshotTable, "commit", real_commit)
-    assert cat.table("index_pages").epoch_of_head() == 1  # crash landed mid-way
-    assert cat.table("uri_counts").epoch_of_head() == 0
+    for t in page_stream.STREAM_TABLES:  # crash landed mid-way
+        assert cat.table(t).epoch_of_head() == (0 if t == crashed else 1), t
 
     # replay of batch 1 (what the streaming checkpoint does on restart)
     page_stream.apply_page_batch(
         spark, cat, read_pages_json(spark, str(f_b)), batch_id=1
     )
-    all_pages = read_pages_json(spark, str(tmp_path / "*.json"))
-    want_uc, want_dc, want_rows = (
-        _snap(d) for d in index_batch.build_index(all_pages, cache=False)
+    _assert_equals_batch(spark, cat, read_pages_json(spark, str(tmp_path / "*.json")))
+
+
+def test_concurrent_commit_failures_all_reported(spark, tmp_path, monkeypatch):
+    """Two of the overlapped commits fail: the first error propagates with
+    its own type, and the raised error names BOTH failed tables."""
+    f_a, f_b = _two_files(tmp_path)
+    cat = Catalog(str(tmp_path / "cat"))
+    page_stream._empty_state(spark, cat)
+    page_stream.apply_page_batch(
+        spark, cat, read_pages_json(spark, str(f_a)), batch_id=0
     )
-    assert _snap(cat.table("uri_counts").read(spark)) == want_uc
-    assert _snap(cat.table("domain_counts").read(spark)) == want_dc
-    assert _snap(cat.table("index_rows").read(spark)) == want_rows
+    _fail_commits(monkeypatch, {"uri_counts", "index_rows"}, epoch=1)
+    with pytest.raises(RuntimeError, match="simulated crash") as err:
+        page_stream.apply_page_batch(
+            spark, cat, read_pages_json(spark, str(f_b)), batch_id=1
+        )
+    report = "\n".join([str(err.value), *getattr(err.value, "__notes__", [])])
+    assert "uri_counts" in report and "index_rows" in report
+
+
+def test_empty_state_finishes_a_crashed_init(spark, tmp_path, monkeypatch):
+    """A crash during the concurrent init commits leaves one table
+    uninitialized; the next ``_empty_state`` probes every table, commits
+    the missing one, and batch 0 then equals a batch build."""
+    f_a, _ = _two_files(tmp_path)
+    cat = Catalog(str(tmp_path / "cat"))
+    real_commit = _fail_commits(monkeypatch, {"domain_counts"}, epoch=-1)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        page_stream._empty_state(spark, cat)
+    monkeypatch.setattr(SnapshotTable, "commit", real_commit)
+    assert [t for t in page_stream.STREAM_TABLES if not cat.table(t).exists()] == [
+        "domain_counts"
+    ]
+
+    page_stream._empty_state(spark, cat)
+    page_stream.apply_page_batch(
+        spark, cat, read_pages_json(spark, str(f_a)), batch_id=0
+    )
+    _assert_equals_batch(spark, cat, read_pages_json(spark, str(f_a)))
 
 
 def test_replayed_batch_is_idempotent(spark, tmp_path):

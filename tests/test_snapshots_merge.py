@@ -119,8 +119,19 @@ def test_untagged_midchain_snapshot_rejected(spark, table):
     """An epoch-less commit landing mid-chain has no position in epoch
     time; epoch-pinned replay must refuse to guess (ADVICE round 3)."""
     table.commit(mk(spark, [("a", 1)]))           # untagged ROOT: fine
-    table.commit(mk(spark, [("a", 2)]), epoch=1)
-    assert table.snapshot_before_epoch(2) is not None
+    merged = table.commit(
+        mk(spark, [("a", 2)]), epoch=1, mode="merge", merge_keys=["uri"]
+    )
+    assert table.snapshot_before_epoch(2) == merged
+    # after a compaction the next epoch's pinned read is the compaction
+    # snapshot (same epoch tag), not the folded merge chain
+    compacted = table.compact(spark)
+    assert table.snapshot_before_epoch(2) == compacted
+    assert rows_of(table.read_before_epoch(spark, 2)) == {("a", 2)}
+    assert len(table.manifest(compacted)["segments"]) == 1
+    empty = Catalog(os.path.dirname(table.dir)).table("empty")
+    with pytest.raises(FileNotFoundError, match="no snapshot below epoch 2"):
+        empty.read_before_epoch(spark, 2)
     table.commit(mk(spark, [("a", 3)]))           # untagged mid-chain
     with pytest.raises(ValueError, match="untagged"):
         table.snapshot_before_epoch(2)

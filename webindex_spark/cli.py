@@ -76,8 +76,7 @@ def configure(config_path: str, app_props_path: str, catalog_dir: str,
         raise SystemExit(f"File does not exist: {app_props_path}")
     cfg = WebIndexConfig.load(config_path)
     from webindex_spark.session import get_spark
-    from webindex_spark.operators.frontier import INDEX_ROW_SCHEMA
-    from webindex_spark.operators.index_batch import accumulo_default_splits
+    from webindex_spark.operators.index_batch import INDEX_ROW_SCHEMA, accumulo_default_splits
     from webindex_spark.sources.snapshots import Catalog
 
     spark = get_spark("webindex-configure", master=master)

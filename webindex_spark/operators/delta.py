@@ -1,9 +1,13 @@
 """Incremental index maintenance — the Fluo observer cascade as batch jobs
 (SURVEY.md §2.9 T1-T5, §3.2).
 
-One call to ``apply_page_deltas`` is one "tick": it consumes a batch of
-page upserts/deletes (T1), diffs them against current page state exactly
-as PageObserver does (T2, PageObserver.java:72-124):
+``cascade`` is the one observer chain every path runs (SURVEY.md §3.2:
+PageObserver -> UriCombineQ -> DomainCombineQ -> IndexUpdateTranslator):
+the crawl epoch (``frontier.run_epoch``), the stream micro-batch
+(``page_stream.apply_page_batch``) and the full-state tick
+``apply_page_deltas`` all call it.  It consumes a batch of page
+upserts/deletes (T1), diffs them against current page state exactly as
+PageObserver does (T2, PageObserver.java:72-124):
 
   * delete  -> docs -1 (unconditionally, reference parity) and links -1
                for every current outbound link;
@@ -15,13 +19,17 @@ as PageObserver does (T2, PageObserver.java:72-124):
 
 then folds the UriInfo deltas into uri_counts dropping rows that sum to
 ZERO (T3, UriCombineQ + UriInfo.reduce:76-82), derives domain ±1 from
-0<->nonzero transitions (UriCombineQ.java:72-77), and applies
-delete-old-write-new mutations to the materialized index rows (T5,
-IndexClient.genUriData/genDomainData/genPageMutations:250-306).
+0<->nonzero transitions (UriCombineQ.java:72-77), and emits
+delete-old-write-new mutations for the materialized index rows (T5,
+IndexClient.genUriData/genDomainData/genPageMutations:250-306).  Its
+output per table is the (upserts, merge keys, deletes) triple a
+``mode="merge"`` snapshot commit takes.
 
 The master invariant (IndexIT.java:107-135): after any sequence of these
 ticks, every state table equals a from-scratch ``index_batch.build_index``
-over the final page set — asserted step-by-step in tests/test_delta.py.
+over the final page set — asserted step-by-step in tests/test_delta.py
+through ``apply_page_deltas``, which is ``cascade`` plus the merge-on-read
+reconcile ``SnapshotTable.read`` applies.
 
 Physical notes: the diff is one full-outer join on the page key; link-set
 diffs are ``array_except`` on (uri,url) pairs — vectorized, no shuffle
@@ -36,13 +44,22 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from webindex_spark.functions.spark_udfs import page_json, rev_encode, uri_rev_domain_col
-from webindex_spark.operators.index_batch import PAGE_SCHEMA
+from webindex_spark.operators.index_batch import INDEX_ROW_SCHEMA, PAGE_SCHEMA
 
 DELTA_SCHEMA = T.StructType(PAGE_SCHEMA.fields + [T.StructField("op", T.StringType(), False)])
 
+# the empty state of the four tables ``cascade`` maintains, in the order
+# of its outputs (the crawl's commit order)
+STATE_SCHEMAS = {
+    "index_pages": PAGE_SCHEMA,
+    "index_rows": INDEX_ROW_SCHEMA,
+    "domain_counts": "rev_domain string, pagecount long",
+    "uri_counts": "uri string, links_to long, docs long",
+}
+
 
 def diff_pages(pages_state: DataFrame, deltas: DataFrame):
-    """T2. Returns (pages_next, uri_deltas, page_mutations).
+    """T2. Returns (uri_deltas, page_mutations).
 
     ``deltas`` must contain at most one row per uri (a batch = one Fluo
     notification sweep).  page_mutations carries what T5 needs: the op,
@@ -104,13 +121,8 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
         .where((F.col("d_links") != 0) | (F.col("d_docs") != 0))
     )
 
-    # next page state: untouched rows + puts (deletes dropped)
-    untouched = pages_state.join(deltas.select("uri"), "uri", "left_anti")
-    puts = deltas.where(F.col("op") != "delete").select(*[f.name for f in PAGE_SCHEMA.fields])
-    pages_next = untouched.unionByName(puts)
-
     page_mutations = with_diffs.select("uri", "op", "next_page", "added_links", "deleted_links")
-    return pages_next, uri_deltas, page_mutations
+    return uri_deltas, page_mutations
 
 
 def merge_uri_counts(uri_counts: DataFrame, uri_deltas: DataFrame):
@@ -141,19 +153,17 @@ def merge_uri_counts(uri_counts: DataFrame, uri_deltas: DataFrame):
     return uri_counts_next, changes.where("touched")
 
 
-def merge_domain_counts(
-    domain_counts: DataFrame, changes: DataFrame, with_changes: bool = False
-):
+def merge_domain_counts(domain_counts: DataFrame, changes: DataFrame):
     """T4: ±1 per 0<->nonzero URI transition (UriCombineQ.java:72-77);
     rows reaching 0 dropped (genDomainData emits nothing for 0).
 
-    With ``with_changes=True`` returns ``(next, domain_changes)`` where
-    domain_changes carries (rev_domain, old_pagecount, new_pagecount) for
-    every TOUCHED domain — O(delta) rows from the same full-outer join
-    that produces the merged table, so per-epoch telemetry like
-    "domains_new" (old 0 -> new nonzero) costs no extra full-table scan
-    (the round-2 metric recomputed a DISTINCT over all of uri_counts per
-    tick just to count these)."""
+    Returns ``(next, domain_changes)`` where domain_changes carries
+    (rev_domain, old_pagecount, new_pagecount) for every TOUCHED domain —
+    O(delta) rows from the same full-outer join that produces the merged
+    table, so per-epoch telemetry like "domains_new" (old 0 -> new
+    nonzero) costs no extra full-table scan (the round-2 metric
+    recomputed a DISTINCT over all of uri_counts per tick just to count
+    these)."""
     was_zero = (F.col("old_links") == 0) & (F.col("old_docs") == 0)
     is_zero = (F.col("new_links") == 0) & (F.col("new_docs") == 0)
     d = (
@@ -178,8 +188,6 @@ def merge_domain_counts(
     nxt = merged.where(F.col("new_pagecount") != 0).select(
         "rev_domain", F.col("new_pagecount").alias("pagecount")
     )
-    if not with_changes:
-        return nxt
     return nxt, merged.where("touched").select(
         "rev_domain", "old_pagecount", "new_pagecount"
     )
@@ -225,7 +233,7 @@ def index_row_mutations(
 
     Every input is delta-sized: ``changes`` = touched uris,
     ``domain_changes`` = touched domains (rev_domain, old_pagecount,
-    new_pagecount — from ``merge_domain_counts(..., with_changes=True)``),
+    new_pagecount — from ``merge_domain_counts``),
     ``page_mutations`` = this batch's pages.  Deriving the domain rows
     from the TOUCHED slice instead of the full old/next tables keeps the
     mutation volume O(delta) — untouched domains previously produced
@@ -289,30 +297,90 @@ def index_row_mutations(
     return inserts, delete_keys
 
 
-def update_index_rows(
-    index_rows: DataFrame,
-    changes: DataFrame,
-    domain_changes: DataFrame,
-    page_mutations: DataFrame,
-) -> DataFrame:
-    """T5 applied as a full next-state table (the standalone/batch seam);
-    the snapshot layer's ``mode="merge"`` commit consumes
-    ``index_row_mutations`` directly instead and never materializes
-    this anti-join over the whole table."""
+def touched(state: DataFrame, delta_keys: DataFrame, key: str) -> DataFrame:
+    """The rows of ``state`` whose ``key`` occurs in ``delta_keys``."""
+    # Every join of delta data against a state table goes through this
+    # broadcast SEMI join first, so the state side is SCANNED (column-
+    # pruned, shuffle-free) but never SHUFFLED — the cascade's exchanges
+    # are all delta-sized.  Iceberg equivalent: MERGE INTO's on-clause
+    # pushdown over a table bucketed by the merge key (storage-partitioned
+    # join); at deltas too big to broadcast a deployment relies on that
+    # bucket co-location, and the semantics are identical either way.
+    return state.join(F.broadcast(delta_keys.select(key)), key, "left_semi")
+
+
+def _split(df: DataFrame, live: F.Column, keys: list[str], *cols):
+    """A merge commit's ``(upserts, merge_keys, deletes)``: rows where
+    ``live`` holds are upserted as ``cols``, the rest delete their key."""
+    return df.where(live).select(*cols), keys, df.where(~live).select(*keys)
+
+
+def cascade(
+    index_pages: DataFrame,
+    uri_counts: DataFrame,
+    domain_counts: DataFrame,
+    deltas: DataFrame,
+):
+    """T2-T5 for one ``DELTA_SCHEMA`` batch (at most one row per uri)
+    against the pinned prior state.  Returns ``(outputs, feed)``:
+    ``outputs`` maps each ``STATE_SCHEMAS`` table to the delta-sized
+    ``(upserts, merge_keys, deletes)`` of its ``mode="merge"`` commit
+    (the ``MERGE INTO`` statements in sources/iceberg_sql.py), and
+    ``feed`` is ``(page_mutations, changes, domain_changes)``, the input
+    of ``frontier.epoch_meters``."""
+    # index_rows is never read: its mutations come from delta-sized inputs
+    # alone, so the engine's largest table costs zero scan per batch.
+    # Each delta frame that feeds both a state slice and a merge is cut
+    # with a LAZY local checkpoint: uncut, the sliced-state-joins-delta
+    # shape nests the delta's plan inside the slice's plan and the logical
+    # plan grows 2^stages.  A lazy cut replaces the plan just as an eager
+    # one does, but the first job that consumes the frame materializes
+    # and caches it instead of a barrier job per frame.  The frames are
+    # delta-sized, so a cut costs the delta, never the state.
+    deltas = deltas.localCheckpoint(eager=False)
+    uri_deltas, page_mutations = diff_pages(touched(index_pages, deltas, "uri"), deltas)
+    uri_deltas = uri_deltas.localCheckpoint(eager=False)
+    _, changes = merge_uri_counts(touched(uri_counts, uri_deltas, "uri"), uri_deltas)
+    changes = changes.localCheckpoint(eager=False)
+    touched_domains = changes.select(uri_rev_domain_col("uri").alias("rev_domain")).distinct()
+    _, domain_changes = merge_domain_counts(
+        touched(domain_counts, touched_domains, "rev_domain"), changes
+    )
+    domain_changes = domain_changes.localCheckpoint(eager=False)
     inserts, delete_keys = index_row_mutations(changes, domain_changes, page_mutations)
-    return index_rows.join(delete_keys, ["row", "cf", "cq"], "left_anti").unionByName(inserts)
+    outputs = {
+        "index_pages": _split(
+            deltas, F.col("op") != "delete", ["uri"], *PAGE_SCHEMA.fieldNames()
+        ),
+        "index_rows": (inserts, ["row", "cf", "cq"], delete_keys),
+        "domain_counts": _split(
+            domain_changes, F.col("new_pagecount") != 0, ["rev_domain"],
+            "rev_domain", F.col("new_pagecount").alias("pagecount"),
+        ),
+        "uri_counts": _split(
+            changes, (F.col("new_links") != 0) | (F.col("new_docs") != 0), ["uri"],
+            "uri", F.col("new_links").alias("links_to"), F.col("new_docs").alias("docs"),
+        ),
+    }
+    return outputs, (page_mutations, changes, domain_changes)
+
+
+def reconcile(state: DataFrame, upserts: DataFrame, keys: list[str], deletes: DataFrame):
+    """One merge commit applied to a full state table: every row whose key
+    is upserted or deleted goes, then the upserts are added — the same
+    merge-on-read rule ``SnapshotTable.read`` applies to a merge chain."""
+    gone = upserts.select(*keys).unionByName(deletes.select(*keys))
+    return state.join(gone, keys, "left_anti").unionByName(upserts)
 
 
 def apply_page_deltas(pages_state, uri_counts, domain_counts, index_rows, deltas):
-    """One full tick. Returns (pages_next, uri_counts_next,
-    domain_counts_next, index_rows_next)."""
-    pages_next, uri_deltas, page_mutations = diff_pages(pages_state, deltas)
-    uri_counts_next, changes = merge_uri_counts(uri_counts, uri_deltas)
-    changes = changes.cache()
-    domain_counts_next, domain_changes = merge_domain_counts(
-        domain_counts, changes, with_changes=True
+    """One full-state tick: ``cascade`` reconciled against each table.
+    Returns (pages_next, uri_counts_next, domain_counts_next,
+    index_rows_next)."""
+    outputs, _ = cascade(pages_state, uri_counts, domain_counts, deltas)
+    return tuple(
+        reconcile(df, *outputs[t]) for df, t in zip(
+            (pages_state, uri_counts, domain_counts, index_rows),
+            ("index_pages", "uri_counts", "domain_counts", "index_rows"),
+        )
     )
-    index_rows_next = update_index_rows(
-        index_rows, changes, domain_changes, page_mutations
-    )
-    return pages_next, uri_counts_next, domain_counts_next, index_rows_next

@@ -14,10 +14,11 @@ the SAME fetch log and the SAME seen set (asserted in tests against a pure
 python model).  Nothing reads wall-clock or partition/task identity.
 
 Resume: ``run_crawl`` consults each table's committed epoch before running
-an epoch job and reads its *inputs* from the epoch-(e-1) snapshots, so a
-run killed between the 8 per-epoch commits re-runs only the interrupted
-epoch (same inputs => same outputs, commits of already-done tables are
-skipped) and never refetches completed epochs.  That is the Iceberg-
+an epoch job and reads its *inputs* pinned at the last snapshot below
+epoch e (``SnapshotTable.read_before_epoch``), so a run killed between the
+10 per-epoch commits re-runs only the interrupted epoch (same inputs =>
+same outputs, commits of already-done tables are skipped) and never
+refetches completed epochs.  That is the Iceberg-
 snapshot checkpoint contract of BASELINE.json, on the snapshots seam.
 
 Physical note: this loop schedules the ALREADY-deduped frontier (robots +
@@ -49,7 +50,9 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from webindex_spark.functions.spark_udfs import parse_url
+from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators import politeness, robots as robots_ops, seen as seen_ops
+from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
 from webindex_spark.sources.snapshots import Catalog
 
 FRONTIER_SCHEMA = T.StructType(
@@ -85,14 +88,6 @@ FETCH_LOG_SCHEMA = T.StructType(
     ]
 )
 
-URI_COUNTS_SCHEMA = T.StructType(
-    [
-        T.StructField("uri", T.StringType(), False),
-        T.StructField("links_to", T.LongType(), False),
-        T.StructField("docs", T.LongType(), False),
-    ]
-)
-
 METER_NAMES = [
     "webindex_pages_ingested",
     "webindex_links_ingested",
@@ -111,15 +106,6 @@ TABLES = [
     "fetched_images", "uri_counts", "domain_counts",
     "index_pages", "index_rows",
 ]
-
-INDEX_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("row", T.StringType(), False),
-        T.StructField("cf", T.StringType(), False),
-        T.StructField("cq", T.StringType(), False),
-        T.StructField("v", T.StringType(), False),
-    ]
-)
 
 
 @dataclass
@@ -210,19 +196,6 @@ def canonicalize(raw_urls: DataFrame, url_col: str = "url") -> DataFrame:
             *[c for c in raw_urls.columns if c != url_col],
         )
     )
-
-
-def _epoch_snapshot(table, epoch: int) -> int:
-    """Snapshot id of the commit for ``epoch`` (manifest lookup)."""
-    for m in table.history():
-        if m.get("epoch") == epoch:
-            return m["snapshot"]
-    raise KeyError(f"table {table.name} has no snapshot for epoch {epoch}")
-
-
-def _read_epoch(spark, cat: Catalog, name: str, epoch: int) -> DataFrame:
-    t = cat.table(name)
-    return t.read(spark, _epoch_snapshot(t, epoch))
 
 
 def epoch_meters(
@@ -323,7 +296,6 @@ def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlCo
     """Epoch 0: canonicalize seeds into the frontier; empty state tables."""
     if cat.table("frontier").exists():
         return  # already initialized (resume)
-    n_parts, bits, k = cfg.bloom
     cand = canonicalize(seeds, "url")
     frontier = (
         cand.groupBy("uri")
@@ -337,20 +309,14 @@ def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlCo
         )
         .select(*[f.name for f in FRONTIER_SCHEMA.fields])
     )
-    from webindex_spark.operators.index_batch import PAGE_SCHEMA
-
     empty = lambda schema: spark.createDataFrame([], schema)  # noqa: E731
     lineage = {"seeds": "input"}
     cat.table("frontier").commit(frontier, epoch=0, lineage=lineage)
     cat.table("seen").commit(empty(SEEN_SCHEMA), epoch=0)
     cat.table("bloom").commit(cfg.empty_filter(spark), epoch=0)
     cat.table("fetch_log").commit(empty(FETCH_LOG_SCHEMA), epoch=0)
-    cat.table("uri_counts").commit(empty(URI_COUNTS_SCHEMA), epoch=0)
-    cat.table("domain_counts").commit(
-        spark.createDataFrame([], "rev_domain string, pagecount long"), epoch=0
-    )
-    cat.table("index_pages").commit(empty(PAGE_SCHEMA), epoch=0)
-    cat.table("index_rows").commit(empty(INDEX_ROW_SCHEMA), epoch=0)
+    for name, schema in delta_ops.STATE_SCHEMAS.items():
+        cat.table(name).commit(empty(schema), epoch=0)
 
 
 def run_epoch(
@@ -362,16 +328,17 @@ def run_epoch(
     epoch: int,
     cfg: CrawlConfig,
 ) -> dict:
-    """One crawl tick. Inputs are read from epoch-1 snapshots; every output
+    """One crawl tick. Inputs are read pinned below ``epoch``; every output
     table is committed with this epoch. Idempotent: tables already at
     ``epoch`` are left untouched (crash-resume re-entry)."""
-    n_parts, bits, k = cfg.bloom
     prev = epoch - 1
 
-    frontier = _read_epoch(spark, cat, "frontier", prev)
-    seen_tbl = _read_epoch(spark, cat, "seen", prev)
-    bloom_tbl = _read_epoch(spark, cat, "bloom", prev)
-    uri_counts = _read_epoch(spark, cat, "uri_counts", prev)
+    def read(name: str) -> DataFrame:
+        return cat.table(name).read_before_epoch(spark, epoch)
+
+    frontier = read("frontier")
+    seen_tbl = read("seen")
+    bloom_tbl = read("bloom")
 
     # 1. robots gate (broadcast join; blocked rows are dropped + marked seen
     #    so they are never re-attempted)
@@ -456,9 +423,7 @@ def run_epoch(
     ).localCheckpoint(eager=True)
     # old values for colliding keys only: broadcast-semi slice of the
     # frontier (scan, no state shuffle), then a delta×delta left join
-    old_slice = frontier.join(
-        F.broadcast(fresh_agg.select("uri")), "uri", "left_semi"
-    ).select(
+    old_slice = delta_ops.touched(frontier, fresh_agg, "uri").select(
         "uri",
         F.col("priority").alias("__old_prio"),
         F.col("discovered_epoch").alias("__old_de"),
@@ -481,28 +446,9 @@ def run_epoch(
     frontier_tombstones = newly_seen.select("uri")
 
     # 7. index maintenance: fetched pages become 'put' deltas for the
-    #    incremental engine (operators/delta.py, T1-T5) — the exact code
-    #    path the standalone tests lock to batch-recompute equivalence.
-    from webindex_spark.operators import delta as delta_ops
-    from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
-
-    # NB: index_rows itself is never read — its merge commit is generated
-    # purely from delta-sized inputs (index_row_mutations), so the
-    # engine's LARGEST table costs zero scan per epoch.
-    index_pages_prev = _read_epoch(spark, cat, "index_pages", prev)
-    domain_counts_prev = _read_epoch(spark, cat, "domain_counts", prev)
-
-    # Touched-slice discipline: every join of delta data against a state
-    # table goes through a broadcast SEMI join on the delta's keys first,
-    # so the state side is SCANNED (column-pruned, shuffle-free) but
-    # never SHUFFLED — the per-epoch exchanges are all delta-sized.
-    # Iceberg equivalent: MERGE INTO's on-clause pushdown over a table
-    # bucketed by the merge key (storage-partitioned join) — at deltas
-    # too big to broadcast a deployment relies on that bucket
-    # co-location; the semantics here are identical either way.
-    def touched(state: DataFrame, delta_keys: DataFrame, key: str) -> DataFrame:
-        return state.join(F.broadcast(delta_keys.select(key)), key, "left_semi")
-
+    #    delta cascade (operators/delta.py, T1-T5) — the one chain the
+    #    stream micro-batch and the IndexIT tests run too.  index_rows is
+    #    never read: its merge commit comes from delta-sized inputs only.
     ex = fetched_pages.select(
         F.col("uri").alias("page_uri"), F.explode("out_urls").alias("url")
     )
@@ -533,46 +479,14 @@ def run_epoch(
             F.lit("put").alias("op"),
         )
     )
-    # pages_state sliced to this epoch's delta keys: diff_pages' left join
-    # then builds from a delta-sized state slice (its full-table
-    # pages_next output is never evaluated here — the index_pages commit
-    # is the merge-mode upserts/tombstones below).
-    #
-    # Lineage discipline: each delta-sized frame that feeds BOTH a slice
-    # semi-join and a downstream merge is cut with an EAGER local
-    # checkpoint — without it the sliced-state-joins-delta shape nests
-    # the delta's plan inside the state slice's plan recursively and the
-    # logical plan grows 2^stages (measured: driver OOM just printing
-    # it).  The frames are delta-sized, so the checkpoint cost is the
-    # delta, never the state.
-    deltas = deltas.localCheckpoint(eager=True)
-    _, uri_deltas, page_mutations = delta_ops.diff_pages(
-        touched(index_pages_prev, deltas, "uri"), deltas
-    )
-    page_mutations = page_mutations.localCheckpoint(eager=True)
-    uri_deltas = uri_deltas.localCheckpoint(eager=True)
-    _, changes = delta_ops.merge_uri_counts(
-        touched(uri_counts, uri_deltas, "uri"), uri_deltas
-    )
-    changes = changes.localCheckpoint(eager=True)
-    from webindex_spark.functions.spark_udfs import uri_rev_domain_col
-
-    touched_domains = changes.select(
-        uri_rev_domain_col("uri").alias("rev_domain")
-    ).distinct()
-    _, domain_changes = delta_ops.merge_domain_counts(
-        touched(domain_counts_prev, touched_domains, "rev_domain"),
-        changes, with_changes=True,
-    )
-    domain_changes = domain_changes.localCheckpoint(eager=True)
-    index_inserts, index_delete_keys = delta_ops.index_row_mutations(
-        changes, domain_changes, page_mutations
+    index_outputs, feed = delta_ops.cascade(
+        read("index_pages"), read("uri_counts"), read("domain_counts"), deltas
     )
 
     # metrics: ONE job over delta-sized inputs, exact reference meter
     # semantics (see epoch_meters' docstring) — never a scan of the full
     # uri_counts state for telemetry.
-    metrics = epoch_meters(page_mutations, changes, domain_changes)
+    metrics = epoch_meters(*feed)
     part_metrics = _partition_metrics(
         fetch_log.select("uri"), cfg.metric_partitions
     )
@@ -599,26 +513,6 @@ def run_epoch(
     #     (delta_only insert above) — at the 10^10 sizing (14.4 GiB over
     #     1024 shards, docs/SCALE.md) a full rewrite per tick is 14.4 GiB
     #     of write volume for a few-MiB dirty set.
-    # (uri, new_links, new_docs) -> upsert rows + zero-reaching delete keys
-    uc_upserts = changes.where(
-        (F.col("new_links") != 0) | (F.col("new_docs") != 0)
-    ).select(
-        "uri",
-        F.col("new_links").alias("links_to"),
-        F.col("new_docs").alias("docs"),
-    )
-    uc_deletes = changes.where(
-        (F.col("new_links") == 0) & (F.col("new_docs") == 0)
-    ).select("uri")
-    dc_upserts = domain_changes.where(F.col("new_pagecount") != 0).select(
-        "rev_domain", F.col("new_pagecount").alias("pagecount")
-    )
-    dc_deletes = domain_changes.where(F.col("new_pagecount") == 0).select("rev_domain")
-    ip_upserts = deltas.where(F.col("op") != "delete").select(
-        *[f.name for f in PAGE_SCHEMA.fields]
-    )
-    ip_deletes = deltas.where(F.col("op") == "delete").select("uri")
-
     outputs = {
         "pages_state": (
             fetched_pages.select(
@@ -631,12 +525,10 @@ def run_epoch(
         "fetch_log": (fetch_log, "append", None, None),
         "seen": (newly_seen, "append", None, None),
         "bloom": (bloom_delta, "merge", ["pid"], None),
-        "index_pages": (ip_upserts, "merge", ["uri"], ip_deletes),
-        "index_rows": (
-            index_inserts, "merge", ["row", "cf", "cq"], index_delete_keys,
-        ),
-        "domain_counts": (dc_upserts, "merge", ["rev_domain"], dc_deletes),
-        "uri_counts": (uc_upserts, "merge", ["uri"], uc_deletes),
+        **{
+            t: (upserts, "merge", keys, dels)
+            for t, (upserts, keys, dels) in index_outputs.items()
+        },
         "frontier": (frontier_upserts, "merge", ["uri"], frontier_tombstones),
     }
     for name, (df, mode, keys, dels) in outputs.items():

@@ -317,6 +317,18 @@ class SnapshotTable:
             sid = m.get("parent")
         return None
 
+    def read_before_epoch(self, spark: SparkSession, epoch: int) -> DataFrame:
+        """``read`` pinned at ``snapshot_before_epoch(epoch)``: the input
+        read of a crawl epoch and of a stream micro-batch."""
+        # after a compaction this is the compacted snapshot (same epoch
+        # tag, newer id), so the next epoch reads one segment, not the chain
+        sid = self.snapshot_before_epoch(epoch)
+        if sid is None:
+            raise FileNotFoundError(
+                f"table {self.name} has no snapshot below epoch {epoch}"
+            )
+        return self.read(spark, sid)
+
 
 class Catalog:
     """A directory of SnapshotTables — the engine's 'warehouse'."""

@@ -1,9 +1,9 @@
 """Streaming incremental index maintenance — the Structured Streaming
 restatement of the reference's ``load-hdfs -> Fluo observer cascade``
 (SURVEY.md §3.2): page-JSON files land in a directory, each micro-batch
-runs the SAME delta engine the snapshot loop uses (operators/delta.py:
-diff -> UriInfo combine -> domain ±1 -> delete-old-write-new export), and
-every state table commits a snapshot tagged with the micro-batch id.
+runs ``delta.cascade`` — the SAME chain the crawl epoch runs (diff ->
+UriInfo combine -> domain ±1 -> delete-old-write-new export) — and every
+state table commits a snapshot tagged with the micro-batch id.
 
 Exactly-once state maintenance comes from the same two pieces the batch
 loop uses, arranged the Structured Streaming way:
@@ -23,47 +23,53 @@ far (the reference's IndexIT equivalence, continuously).
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from webindex_spark.operators import delta as delta_ops
 from webindex_spark.sources.pages_json import GSON_PAGE_SCHEMA, gson_pages_transform
 from webindex_spark.sources.snapshots import Catalog
 
 STREAM_TABLES = ("index_pages", "uri_counts", "domain_counts", "index_rows")
 
 
-def _empty_state(spark: SparkSession, cat: Catalog) -> None:
-    from webindex_spark.operators.frontier import URI_COUNTS_SCHEMA, INDEX_ROW_SCHEMA
-    from webindex_spark.operators.index_batch import PAGE_SCHEMA
+def _overlapped(calls: dict) -> None:
+    """Run ``{table: call}`` on driver threads (guide §2.6); raise the
+    first error only once all calls ended, with a note per failed table."""
+    # draining first means a replay never runs beside a straggler commit;
+    # the first error keeps its type, the notes hide no other failure
+    with ThreadPoolExecutor(max_workers=len(STREAM_TABLES)) as pool:
+        futs = {name: pool.submit(call) for name, call in calls.items()}
+    errs = {name: f.exception() for name, f in futs.items() if f.exception()}
+    if errs:
+        first = next(iter(errs.values()))
+        for name, e in errs.items():
+            first.add_note(f"{name} commit failed: {type(e).__name__}: {e}")
+        raise first
 
-    if cat.table("index_pages").exists():
-        return
-    # four independent empty-segment writes: overlapped on driver threads
-    # (guide §2.6) — each is a tiny Spark write job whose cost is pure
-    # scheduling, so running them concurrently hides three of the four
-    inits = {
-        "index_pages": PAGE_SCHEMA,
-        "uri_counts": URI_COUNTS_SCHEMA,
-        "domain_counts": "rev_domain string, pagecount long",
-        "index_rows": INDEX_ROW_SCHEMA,
-    }
-    with ThreadPoolExecutor(max_workers=len(inits)) as pool:
-        futs = [
-            pool.submit(
-                cat.table(t).commit, spark.createDataFrame([], sch), epoch=-1
-            )
-            for t, sch in inits.items()
-        ]
-        for f in futs:
-            f.result()
+
+def _empty_state(spark: SparkSession, cat: Catalog) -> None:
+    """Commit an empty epoch -1 snapshot of every ``STREAM_TABLES`` table
+    that has none."""
+    # every table is probed, so a crash that left some of the concurrent,
+    # unordered init commits unpublished is finished by the next call;
+    # each is a tiny write job of pure scheduling cost, so they overlap
+    _overlapped({
+        t: partial(
+            cat.table(t).commit,
+            spark.createDataFrame([], delta_ops.STATE_SCHEMAS[t]), epoch=-1,
+        )
+        for t in STREAM_TABLES
+        if not cat.table(t).exists()
+    })
 
 
 def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
                      batch_id: int) -> None:
-    """One micro-batch through the incremental delta engine, committed as
-    snapshot epoch ``batch_id`` (idempotent re-entry per table)."""
-    from webindex_spark.operators import delta as delta_ops
+    """One micro-batch through ``delta.cascade``, committed as snapshot
+    epoch ``batch_id`` (idempotent re-entry per table)."""
 
     def _epoch(t):
         e = cat.table(t).epoch_of_head()
@@ -80,110 +86,33 @@ def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
     # stale tables as batch_id — silently losing the batch.  Pinning makes
     # the replay recompute the SAME outputs the crashed attempt did, and
     # the per-table epoch check turns its re-commit into skip-or-publish.
-    def _read_before(t: str) -> DataFrame:
-        tbl = cat.table(t)
-        sid = tbl.snapshot_before_epoch(batch_id)
-        if sid is None:
-            raise RuntimeError(
-                f"table {t} has no snapshot below batch {batch_id}"
-            )
-        return tbl.read(spark, sid)
+    def read(t: str) -> DataFrame:
+        return cat.table(t).read_before_epoch(spark, batch_id)
 
-    # Same O(delta) discipline as frontier.run_epoch: every
-    # delta-vs-state join goes through a broadcast SEMI touched-slice
-    # (state scanned, never shuffled), every table commits mode="merge"
-    # (upsert rows + delete keys — batch-sized writes, never O(state)),
-    # index_rows is never even read, and each delta frame feeding both a
-    # slice and a merge is cut with a LAZY localCheckpoint: the first
-    # commit that consumes it materializes and caches it (later
-    # consumers read the cache), the streaming lineage is still cut,
-    # and the four dedicated per-frame barrier jobs the eager form
-    # scheduled per micro-batch disappear.
-    from webindex_spark.functions.spark_udfs import uri_rev_domain_col
-    from webindex_spark.operators.index_batch import PAGE_SCHEMA
-
-    deltas = pages.withColumn("op", F.lit("put")).localCheckpoint(eager=False)
-    index_pages_prev = _read_before("index_pages")
-    uri_counts_prev = _read_before("uri_counts")
-    domain_counts_prev = _read_before("domain_counts")
-
-    def touched(state: DataFrame, keys_df: DataFrame, key: str) -> DataFrame:
-        return state.join(F.broadcast(keys_df.select(key)), key, "left_semi")
-
-    _, uri_deltas, mutations = delta_ops.diff_pages(
-        touched(index_pages_prev, deltas, "uri"), deltas
+    outputs, _ = delta_ops.cascade(
+        read("index_pages"), read("uri_counts"), read("domain_counts"),
+        pages.withColumn("op", F.lit("put")),
     )
-    uri_deltas = uri_deltas.localCheckpoint(eager=False)
-    _, changes = delta_ops.merge_uri_counts(
-        touched(uri_counts_prev, uri_deltas, "uri"), uri_deltas
-    )
-    changes = changes.localCheckpoint(eager=False)
-    touched_domains = changes.select(
-        uri_rev_domain_col("uri").alias("rev_domain")
-    ).distinct()
-    _, domain_changes = delta_ops.merge_domain_counts(
-        touched(domain_counts_prev, touched_domains, "rev_domain"),
-        changes, with_changes=True,
-    )
-    domain_changes = domain_changes.localCheckpoint(eager=False)
-    inserts, delete_keys = delta_ops.index_row_mutations(
-        changes, domain_changes, mutations
-    )
-    outputs = {
-        "index_pages": (
-            deltas.where(F.col("op") != "delete")
-            .select(*[f.name for f in PAGE_SCHEMA.fields]),
-            ["uri"],
-            deltas.where(F.col("op") == "delete").select("uri"),
-        ),
-        "uri_counts": (
-            changes.where(
-                (F.col("new_links") != 0) | (F.col("new_docs") != 0)
-            ).select(
-                "uri",
-                F.col("new_links").alias("links_to"),
-                F.col("new_docs").alias("docs"),
-            ),
-            ["uri"],
-            changes.where(
-                (F.col("new_links") == 0) & (F.col("new_docs") == 0)
-            ).select("uri"),
-        ),
-        "domain_counts": (
-            domain_changes.where(F.col("new_pagecount") != 0).select(
-                "rev_domain", F.col("new_pagecount").alias("pagecount")
-            ),
-            ["rev_domain"],
-            domain_changes.where(F.col("new_pagecount") == 0).select("rev_domain"),
-        ),
-        "index_rows": (inserts, ["row", "cf", "cq"], delete_keys),
-    }
     # The four table commits are independent of EACH OTHER (each reads its
-    # own slice of the shared lazily-checkpointed delta frames, and the
-    # snapshot substrate publishes per-table with an atomic HEAD replace),
-    # so they run overlapped on driver threads (guide §2.6): the three
-    # cheap commits hide under index_rows' deeper insert chain, and the
-    # shared lazy checkpoints are materialized once whichever consumer job
-    # gets there first (BlockManager block-level locking makes the race
-    # compute-once).  Crash semantics are unchanged: a failure in ANY
-    # commit leaves some subset of tables published at batch_id, exactly
-    # the partial state the pinned replay (_read_before) is built for —
-    # all remaining futures are drained before the error propagates, so a
-    # replay never runs concurrently with a straggler commit.
-    def _commit_one(item):
-        name, (df, keys, dels) = item
-        if _epoch(name) >= batch_id:
-            return
-        cat.table(name).commit(
-            df, epoch=batch_id, lineage={"stream_batch": batch_id},
-            mode="merge", merge_keys=keys, deletes=dels,
+    # own slice of the cascade's shared lazily-checkpointed delta frames,
+    # and the snapshot substrate publishes per-table with an atomic HEAD
+    # replace), so they run overlapped: the three cheap commits hide under
+    # index_rows' deeper insert chain, and the shared lazy checkpoints are
+    # materialized once whichever consumer job gets there first
+    # (BlockManager block-level locking makes the race compute-once).  A
+    # failure in ANY commit leaves some subset of tables published at
+    # batch_id — exactly the partial state the pinned replay is built for.
+    # Submitted in STREAM_TABLES order: the FIFO scheduler serves the
+    # earlier-submitted job's tasks first.
+    _overlapped({
+        name: partial(
+            cat.table(name).commit, outputs[name][0], epoch=batch_id,
+            lineage={"stream_batch": batch_id}, mode="merge",
+            merge_keys=outputs[name][1], deletes=outputs[name][2],
         )
-
-    with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
-        futs = [pool.submit(_commit_one, it) for it in outputs.items()]
-        errs = [e for e in (f.exception() for f in futs) if e is not None]
-        if errs:
-            raise errs[0]
+        for name in STREAM_TABLES
+        if _epoch(name) < batch_id
+    })
 
 
 def start_page_stream(spark: SparkSession, input_dir: str, cat: Catalog,
