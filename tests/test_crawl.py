@@ -235,6 +235,61 @@ def test_resume_after_kill(spark, world, tmp_path_factory, crawled, kill_after):
         assert a == b, t
 
 
+MERGE_TABLES = (
+    "bloom", "index_pages", "index_rows", "domain_counts", "uri_counts", "frontier",
+)
+
+
+@pytest.mark.parametrize("failed", ["bloom", "index_rows", "frontier"])
+def test_resume_after_compaction_crash(
+    spark, world, tmp_path_factory, crawled, monkeypatch, failed
+):
+    """The epoch's compactions run overlapped after the frontier commit:
+    one failing compaction is raised only once the others have drained,
+    names its table, and leaves the epoch done — the resumed crawl does
+    not re-run it, and merge-on-read of the uncompacted chain keeps the
+    final state equal to the uninterrupted run."""
+    corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
+    cat_full, _ = crawled
+    cat = Catalog(str(tmp_path_factory.mktemp("crawl_compact_kill")))
+    cfg = crawl_cfg()
+    cfg.compact_every = 2
+    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
+
+    real_compact = SnapshotTable.compact
+
+    def dying_compact(self, spark_):
+        if self.name == failed:
+            raise RuntimeError("simulated kill in compaction")
+        return real_compact(self, spark_)
+
+    monkeypatch.setattr(SnapshotTable, "compact", dying_compact)
+    with pytest.raises(RuntimeError, match="simulated kill") as err:
+        frontier_ops.run_epoch(spark, cat, corpus, images, robots, 2, cfg)
+    monkeypatch.setattr(SnapshotTable, "compact", real_compact)
+    assert any(failed in n for n in getattr(err.value, "__notes__", []))
+    # every other compaction published before the error surfaced
+    for t in MERGE_TABLES:
+        assert cat.table(t).manifest().get("compaction", False) is (t != failed), t
+    assert cat.table("frontier").epoch_of_head() == 2
+
+    snap_before = cat.table("frontier").head()
+    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg)
+    history = cat.table("frontier").history()
+    # one data commit per epoch, plus epoch 2's compaction if it survived
+    assert [m["epoch"] for m in history if not m.get("compaction")] == [0, 1, 2, 3]
+    assert len(history) == 4 + (failed != "frontier")
+    assert cat.table("frontier").head() == snap_before + 1
+
+    for t in ("seen", "fetch_log", *MERGE_TABLES):
+        a, b = (
+            {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+             for r in c.table(t).read(spark).collect()}
+            for c in (cat, cat_full)
+        )
+        assert a == b, t
+
+
 def test_crawl_with_compaction_identical(spark, world, tmp_path_factory, crawled):
     """compact_every folds each mutating table's merge chain back to one
     segment inside the epoch loop; the crawl outcome (frontier, seen,

@@ -88,6 +88,29 @@ def test_parquet_backend_leaves_inspectable_snapshots(spark, tmp_path):
         assert spark.read.parquet(f"{snaps}/{d}").count() > 0
 
 
+def test_parquet_cut_rereads_without_a_job(spark, tmp_path, monkeypatch):
+    """The parquet cut plans its re-read from the frame's own schema, so
+    once the write returns no further job (footer inference) runs."""
+    from pyspark.sql import DataFrameWriter
+
+    sc = spark.sparkContext
+    real_parquet = DataFrameWriter.parquet
+
+    def write_then_regroup(self, path, *a, **kw):
+        real_parquet(self, path, *a, **kw)
+        sc.setJobGroup("parquet-cut-reread", "parquet-cut-reread")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_regroup)
+    df = spark.createDataFrame(EDGES, ["src", "dst"])
+    try:
+        cut = Materializer("parquet", path=f"{tmp_path}/cut")._cut(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("parquet-cut-reread")) == []
+    assert cut.schema == df.schema
+    assert _rows(cut) == _rows(df)
+
+
 def test_materializer_of_coercions(tmp_path):
     m = Materializer("local", every=3)
     assert Materializer.of(m) is m

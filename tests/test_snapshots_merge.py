@@ -10,10 +10,15 @@ Contract under test:
   * compact() folds the chain to one segment without changing the
     visible rows or the epoch tag;
   * guard rails: merge_keys immutability, merge without keys rejected,
-    untagged mid-chain snapshots rejected by epoch-pinned reads.
+    untagged mid-chain snapshots rejected by epoch-pinned reads, a frame
+    whose column types disagree with the table's schema rejected;
+  * the manifest's schema plans every read: building one launches no
+    Spark job, and a manifest without a schema still reads by inference.
 """
 
+import json
 import os
+import uuid
 
 import pytest
 
@@ -135,3 +140,80 @@ def test_untagged_midchain_snapshot_rejected(spark, table):
     table.commit(mk(spark, [("a", 3)]))           # untagged mid-chain
     with pytest.raises(ValueError, match="untagged"):
         table.snapshot_before_epoch(2)
+
+
+def _jobs_of(spark, fn):
+    """Job ids launched while ``fn`` runs under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("chain", ["full", "append", "merge"])
+def test_reads_plan_from_manifest_schema_without_jobs(spark, table, chain):
+    """Iceberg plans a scan from its table metadata; so does ``read``:
+    neither ``read`` nor ``read_before_epoch`` opens a parquet footer."""
+    table.commit(mk(spark, [("a", 1), ("b", 2)]), epoch=0)
+    if chain == "append":
+        table.commit(mk(spark, [("c", 3)]), epoch=1, mode="append")
+    if chain == "merge":
+        table.commit(
+            mk(spark, [("a", 10)]), epoch=1, mode="merge", merge_keys=["uri"],
+            deletes=keys(spark, ["b"]),
+        )
+        assert table.manifest()["delete_segments"]
+    for read in (lambda: table.read(spark),
+                 lambda: table.read_before_epoch(spark, 2)):
+        assert _jobs_of(spark, read) == [], chain
+    want = {"full": {("a", 1), ("b", 2)},
+            "append": {("a", 1), ("b", 2), ("c", 3)},
+            "merge": {("a", 10)}}[chain]
+    assert rows_of(table.read(spark)) == want
+    assert table.read(spark).columns == ["uri", "v"]
+
+
+@pytest.mark.parametrize("mode", ["append", "merge"])
+def test_commit_with_mismatched_column_type_rejected(spark, table, mode):
+    """A frame whose column types disagree with the recorded schema is
+    refused before anything is written: HEAD stays, no snap dir appears."""
+    table.commit(mk(spark, [("a", 1)]), epoch=0)
+    head = table.head()
+    bad = spark.createDataFrame([("b", "2")], "uri string, v string")
+    with pytest.raises(ValueError, match="schema"):
+        table.commit(bad, epoch=1, mode=mode, merge_keys=["uri"])
+    assert table.head() == head
+    assert sorted(d for d in os.listdir(table.dir) if d.startswith("snap-")) == [
+        "snap-00001"
+    ]
+    # nullability and column order are not part of the check
+    table.commit(
+        spark.createDataFrame([(2, "b")], "v long not null, uri string"),
+        epoch=1, mode=mode, merge_keys=["uri"],
+    )
+    assert table.read(spark).columns == ["uri", "v"]
+    assert rows_of(table.read(spark)) == {("a", 1), ("b", 2)}
+
+
+def test_manifest_without_schema_reads_by_inference(spark, table):
+    """A catalog written before manifests carried a schema still reads
+    the same rows, so a killed crawl from that code resumes."""
+    table.commit(mk(spark, [("a", 1), ("b", 2)]), epoch=0)
+    table.commit(
+        mk(spark, [("a", 10)]), epoch=1, mode="merge", merge_keys=["uri"],
+        deletes=keys(spark, ["b"]),
+    )
+    want = rows_of(table.read(spark))
+    for sid in (1, 2):
+        path = table._manifest_path(sid)
+        with open(path, encoding="utf-8") as f:
+            man = json.load(f)
+        del man["schema"]
+        with open(path, "w", encoding="utf-8") as f:
+            json.dump(man, f)
+    assert rows_of(table.read(spark)) == want == {("a", 10)}
+    assert rows_of(table.read(spark, 1)) == {("a", 1), ("b", 2)}

@@ -44,6 +44,7 @@ xxhash64(uri) % n, a physical-layout-independent partition id).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
@@ -53,7 +54,7 @@ from webindex_spark.functions.spark_udfs import parse_url
 from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators import politeness, robots as robots_ops, seen as seen_ops
 from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
-from webindex_spark.sources.snapshots import Catalog
+from webindex_spark.sources.snapshots import Catalog, overlapped
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -496,6 +497,10 @@ def run_epoch(
     # Commit order matters for crash-resume: run_crawl's done-check watches
     # the five core tables, and "frontier" commits LAST, so done ⇒ every
     # earlier commit (incl. pages_state/fetched_images) already published.
+    # Compactions may follow "frontier", overlapped: each is a mode="full"
+    # commit of the same rows under the same epoch tag, so the done-check
+    # never sees it, and a kill part-way only leaves some chains
+    # uncompacted, which merge-on-read reads correctly.
     #
     # Every per-epoch commit is O(delta) write volume:
     #   * monotone tables (seen / fetch_log / pages_state / fetched_images)
@@ -531,6 +536,7 @@ def run_epoch(
         },
         "frontier": (frontier_upserts, "merge", ["uri"], frontier_tombstones),
     }
+    compactions = {}
     for name, (df, mode, keys, dels) in outputs.items():
         t = cat.table(name)
         if t.epoch_of_head() is not None and t.epoch_of_head() >= epoch:
@@ -547,7 +553,8 @@ def run_epoch(
             and cfg.compact_every
             and epoch % cfg.compact_every == 0
         ):
-            t.compact(spark)
+            compactions[name] = partial(t.compact, spark)
+    overlapped(compactions)
 
     for c in (gated, scheduled, fetched_pages, newly_seen):
         c.unpersist()

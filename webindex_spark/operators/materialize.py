@@ -95,7 +95,8 @@ class Materializer:
         self._snaps += 1
         snap = f"{self.path}/snap_{self._snaps:04d}_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(snap)
-        return df.sparkSession.read.parquet(snap)
+        # the frame's own schema plans the re-read: no footer-inference job
+        return df.sparkSession.read.schema(df.schema).parquet(snap)
 
     def pin(self, df: DataFrame) -> DataFrame:
         """Cache a STATIC pre-loop frame (adjacency, node table) while

@@ -21,7 +21,12 @@ properties the resume logic relies on:
     snapshots it was computed from and the engine's per-partition meter
     values (BASELINE.md's ten webindex meter names), so "which partitions
     already processed epoch E" is answerable without re-reading data —
-    that is the per-partition lineage check FIXTURES.md §7 asks for.
+    that is the per-partition lineage check FIXTURES.md §7 asks for;
+  * **schema in the manifest** (Iceberg table metadata): ``read`` plans
+    every segment scan from the recorded schema, so building a read
+    launches no Spark job (no per-segment parquet-footer inference), and
+    an append/merge commit whose columns disagree with it is refused
+    before anything is written.
 
 This mirrors the role Fluo's MVCC transactions + sequenced export queue
 play in the reference (PageObserver.java:72-124, IndexClient.java:250-306):
@@ -35,10 +40,34 @@ import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def overlapped(calls: dict) -> None:
+    """Run ``{name: call}`` on driver threads; raise the first error only
+    once all calls ended, with a note per failed call."""
+    # draining first means a replay never runs beside a straggler commit;
+    # the first error keeps its type, the notes hide no other failure
+    if not calls:
+        return
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futs = {name: pool.submit(call) for name, call in calls.items()}
+    errs = {name: f.exception() for name, f in futs.items() if f.exception()}
+    if errs:
+        first = next(iter(errs.values()))
+        for name, e in errs.items():
+            first.add_note(f"{name} failed: {type(e).__name__}: {e}")
+        raise first
+
+
+def _types(schema: StructType) -> dict:
+    # name -> type, blind to nullability and column order
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
 class SnapshotTable:
@@ -89,17 +118,22 @@ class SnapshotTable:
         if sid is None:
             raise FileNotFoundError(f"table {self.name} has no committed snapshot")
         man = self.manifest(sid)
+        # a manifest written before schemas were recorded infers from files
+        schema = StructType.fromJson(man["schema"]) if "schema" in man else None
+
+        def scan(paths, schema=schema):
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return reader.parquet(*[os.path.join(self.dir, p) for p in paths])
+
         segs = man.get("segments")
         deletes = man.get("delete_segments") or []
         merge_segs = man.get("merge_segments") or []
         if not deletes and not merge_segs:
-            if segs:
-                return spark.read.parquet(*[os.path.join(self.dir, s) for s in segs])
-            return spark.read.parquet(self._snap_dir(sid))
+            return scan(segs or [self._snap_dir(sid)])
         keys = man["merge_keys"]
+        key_schema = schema and StructType([schema[k] for k in keys])
         parts = [
-            spark.read.parquet(os.path.join(self.dir, s))
-            .withColumn("__seq", F.lit(i).cast("long"))
+            scan([s]).withColumn("__seq", F.lit(i).cast("long"))
             for i, s in enumerate(segs)
         ]
         rows = reduce(DataFrame.unionByName, parts)
@@ -108,13 +142,11 @@ class SnapshotTable:
         # merge data segment (upsert = delete old versions + insert new)
         merge_seq = {s: i for i, s in enumerate(segs)}
         tomb_parts = [
-            spark.read.parquet(os.path.join(self.dir, s))
-            .select(*keys)
+            scan([s], key_schema).select(*keys)
             .withColumn("__tseq", F.lit(int(seq)).cast("long"))
             for s, seq in deletes
         ] + [
-            spark.read.parquet(os.path.join(self.dir, s))
-            .select(*keys)
+            scan([s], key_schema).select(*keys)
             .withColumn("__tseq", F.lit(merge_seq[s]).cast("long"))
             for s in merge_segs
         ]
@@ -183,7 +215,10 @@ class SnapshotTable:
 
         Either way the write lands in a scratch dir first, is renamed to
         its immutable location, the manifest is written, and only then
-        does the atomic HEAD replace publish the snapshot.
+        does the atomic HEAD replace publish the snapshot.  The manifest
+        records the table schema; an append/merge ``df`` must match the
+        parent's column names and types (nullability and column order
+        aside), else ``ValueError`` is raised before anything is written.
         """
         if mode not in ("full", "append", "merge"):
             raise ValueError(f"unknown commit mode {mode!r}")
@@ -191,6 +226,22 @@ class SnapshotTable:
             raise ValueError("mode='merge' requires merge_keys")
         parent = self.head()
         sid = (parent or 0) + 1
+        parent_man = self.manifest(parent) if parent is not None else {}
+        if mode == "merge" and parent_man.get("merge_keys") not in (None, merge_keys):
+            raise ValueError(
+                f"merge_keys {merge_keys} != parent's {parent_man['merge_keys']}"
+            )
+        schema = df.schema.jsonValue()
+        if mode != "full" and "schema" in parent_man:
+            # new segments must read under the parent's schema; keeping it
+            # keeps the read column order that of the first segment
+            schema = parent_man["schema"]
+            want, got = _types(StructType.fromJson(schema)), _types(df.schema)
+            if got != want:
+                raise ValueError(
+                    f"table {self.name}: {mode} frame columns {got} != "
+                    f"table schema {want}"
+                )
         tmp = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(tmp)
         target = self._snap_dir(sid)
@@ -198,7 +249,6 @@ class SnapshotTable:
             shutil.rmtree(target)
         os.replace(tmp, target)
         own_seg = os.path.basename(target)
-        parent_man = self.manifest(parent) if parent is not None else {}
         parent_segs = parent_man.get(
             "segments",
             [os.path.basename(self._snap_dir(parent))] if parent is not None else [],
@@ -208,10 +258,6 @@ class SnapshotTable:
         if mode == "append" and parent is not None:
             segments = parent_segs + [own_seg]
         elif mode == "merge":
-            if merge_keys and parent_man.get("merge_keys") not in (None, merge_keys):
-                raise ValueError(
-                    f"merge_keys {merge_keys} != parent's {parent_man['merge_keys']}"
-                )
             segments = parent_segs + [own_seg]
             merge_segments.append(own_seg)
             if deletes is not None:
@@ -240,6 +286,7 @@ class SnapshotTable:
             "lineage": lineage or {},
             "metrics": metrics or {},
             "partition_metrics": partition_metrics or [],
+            "schema": schema,
         }
         if mode == "merge" or merge_segments or delete_segments:
             man["merge_keys"] = merge_keys or parent_man.get("merge_keys")

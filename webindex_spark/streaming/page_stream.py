@@ -22,7 +22,6 @@ far (the reference's IndexIT equivalence, continuously).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
 import pyspark.sql.functions as F
@@ -30,24 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from webindex_spark.operators import delta as delta_ops
 from webindex_spark.sources.pages_json import GSON_PAGE_SCHEMA, gson_pages_transform
-from webindex_spark.sources.snapshots import Catalog
+from webindex_spark.sources.snapshots import Catalog, overlapped
 
 STREAM_TABLES = ("index_pages", "uri_counts", "domain_counts", "index_rows")
-
-
-def _overlapped(calls: dict) -> None:
-    """Run ``{table: call}`` on driver threads (guide §2.6); raise the
-    first error only once all calls ended, with a note per failed table."""
-    # draining first means a replay never runs beside a straggler commit;
-    # the first error keeps its type, the notes hide no other failure
-    with ThreadPoolExecutor(max_workers=len(STREAM_TABLES)) as pool:
-        futs = {name: pool.submit(call) for name, call in calls.items()}
-    errs = {name: f.exception() for name, f in futs.items() if f.exception()}
-    if errs:
-        first = next(iter(errs.values()))
-        for name, e in errs.items():
-            first.add_note(f"{name} commit failed: {type(e).__name__}: {e}")
-        raise first
 
 
 def _empty_state(spark: SparkSession, cat: Catalog) -> None:
@@ -56,7 +40,7 @@ def _empty_state(spark: SparkSession, cat: Catalog) -> None:
     # every table is probed, so a crash that left some of the concurrent,
     # unordered init commits unpublished is finished by the next call;
     # each is a tiny write job of pure scheduling cost, so they overlap
-    _overlapped({
+    overlapped({
         t: partial(
             cat.table(t).commit,
             spark.createDataFrame([], delta_ops.STATE_SCHEMAS[t]), epoch=-1,
@@ -104,7 +88,7 @@ def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
     # batch_id — exactly the partial state the pinned replay is built for.
     # Submitted in STREAM_TABLES order: the FIFO scheduler serves the
     # earlier-submitted job's tasks first.
-    _overlapped({
+    overlapped({
         name: partial(
             cat.table(name).commit, outputs[name][0], epoch=batch_id,
             lineage={"stream_batch": batch_id}, mode="merge",
