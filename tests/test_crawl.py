@@ -235,6 +235,47 @@ def test_resume_after_kill(spark, world, tmp_path_factory, crawled, kill_after):
         assert a == b, t
 
 
+def test_resume_after_init_kill(spark, world, tmp_path_factory, crawled):
+    """Kill ``init_crawl`` after its first commit, rerun: "frontier" is
+    the init's last commit, so the resumed run finishes the missing
+    epoch-0 tables, commits none twice, and ends equal to the
+    uninterrupted run."""
+    corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
+    cat_full, _ = crawled
+    cat = Catalog(str(tmp_path_factory.mktemp("crawl_init_kill")))
+    cfg = crawl_cfg()
+
+    commits = {"n": 0}
+    orig_commit = SnapshotTable.commit
+
+    def dying_commit(self, df, **kw):
+        if commits["n"] >= 1:
+            raise RuntimeError("simulated kill")
+        commits["n"] += 1
+        return orig_commit(self, df, **kw)
+
+    SnapshotTable.commit = dying_commit
+    try:
+        with pytest.raises(RuntimeError, match="simulated kill"):
+            frontier_ops.init_crawl(spark, cat, seeds, cfg)
+    finally:
+        SnapshotTable.commit = orig_commit
+    assert not cat.table("frontier").exists()
+
+    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg)
+    for t in frontier_ops.TABLES:
+        assert (
+            [m["epoch"] for m in cat.table(t).history()]
+            == [m["epoch"] for m in cat_full.table(t).history()]
+        ), t
+        a, b = (
+            {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+             for r in c.table(t).read(spark).collect()}
+            for c in (cat, cat_full)
+        )
+        assert a == b, t
+
+
 MERGE_TABLES = (
     "bloom", "index_pages", "index_rows", "domain_counts", "uri_counts", "frontier",
 )

@@ -1,12 +1,10 @@
 """The lineage-truncation seam (operators/materialize.py): every
 bounded-round iterative operator must produce IDENTICAL results under
 
-* the executor-local default (``localCheckpoint``, eager),
-* the lazy local variant (cut folded into the first consuming job),
+* the executor-local default (lazy ``localCheckpoint``, the cut folded
+  into the first consuming job), and
 * the durable parquet round-trip (the preemptible-cluster seam the
-  reference's resume contract demands — IndexIT.java:107-135), and
-* a cadence-2 materializer (persist between cuts — the round-6
-  barrier-relief configuration for large graphs).
+  reference's resume contract demands — IndexIT.java:107-135).
 
 The recurrences are integer fixed-point, so "identical" is exact row
 equality, not tolerance."""
@@ -30,12 +28,7 @@ EDGES = (
 
 
 def _backends(tmp_path):
-    return {
-        "local": "local",
-        "local_lazy": "local_lazy",
-        "parquet": f"parquet:{tmp_path}/snaps",
-        "cadence2": Materializer("local", every=2),
-    }
+    return {"local": None, "parquet": f"parquet:{tmp_path}/snaps"}
 
 
 def _rows(df):
@@ -50,24 +43,31 @@ def test_backends_agree_exactly(spark, tmp_path, op):
     df = spark.createDataFrame(EDGES, ["src", "dst"])
     seeds = spark.createDataFrame([("a",), ("q1",)], ["id"])
 
-    def run(mat):
+    def runs(mat):
         if op == "pagerank":
-            return pagerank(df, iterations=4, materialize=mat)
-        if op == "hits":
-            return hits(df, iterations=3, materialize=mat)
-        if op == "kcore":
-            return kcore_peel(df, k=2, rounds=4, materialize=mat)
-        if op == "bfs":
-            return hop_distances(df, seeds, rounds=5, materialize=mat)
-        return connected_components(df, materialize=mat)
+            yield pagerank(df, iterations=4, materialize=mat)
+        elif op == "hits":
+            yield hits(df, iterations=3, materialize=mat)
+        elif op == "kcore":
+            # both survivor-set joins: broadcast and the shuffle-join
+            # fallback for node sets too large to broadcast
+            for bcast in (True, False):
+                yield kcore_peel(
+                    df, k=2, rounds=4, materialize=mat, broadcast_nodes=bcast
+                )
+        elif op == "bfs":
+            yield hop_distances(df, seeds, rounds=5, materialize=mat)
+        else:
+            yield connected_components(df, materialize=mat)
 
     want = None
     for name, mat in _backends(tmp_path).items():
-        got = _rows(run(mat))
-        if want is None:
-            want = got
-        assert got == want, f"{op}: backend {name} diverged"
-        assert len(got) > 0
+        for i, out in enumerate(runs(mat)):
+            got = _rows(out)
+            if want is None:
+                want = got
+            assert got == want, f"{op}: backend {name} run {i} diverged"
+            assert len(got) > 0
 
 
 def test_parquet_backend_leaves_inspectable_snapshots(spark, tmp_path):
@@ -103,7 +103,7 @@ def test_parquet_cut_rereads_without_a_job(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(DataFrameWriter, "parquet", write_then_regroup)
     df = spark.createDataFrame(EDGES, ["src", "dst"])
     try:
-        cut = Materializer("parquet", path=f"{tmp_path}/cut")._cut(df)
+        cut = Materializer(f"{tmp_path}/cut")(df)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("parquet-cut-reread")) == []
@@ -112,17 +112,14 @@ def test_parquet_cut_rereads_without_a_job(spark, tmp_path, monkeypatch):
 
 
 def test_materializer_of_coercions(tmp_path):
-    m = Materializer("local", every=3)
+    m = Materializer()
     assert Materializer.of(m) is m
-    assert Materializer.of(None).mode == "local"
+    assert Materializer.of(None).path is None
     p = Materializer.of(f"parquet:{tmp_path}/x")
-    assert p.mode == "parquet" and p.path == f"{tmp_path}/x"
-    with pytest.raises(ValueError):
-        Materializer("nope")
-    with pytest.raises(ValueError):
-        Materializer("parquet")  # needs a path
-    with pytest.raises(TypeError):
-        Materializer.of(42)
+    assert p.path == f"{tmp_path}/x"
+    for bad in ("local", "parquet:", "nope", 42):
+        with pytest.raises(ValueError):
+            Materializer.of(bad)
 
 
 def test_kcore_run_to_fixpoint(spark):

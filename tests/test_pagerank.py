@@ -1,8 +1,11 @@
 """Fixed-point PageRank vs an exact python-int replica of the same
 recurrence, plus structural sanity (hubs outrank leaves, mass conserved
-up to documented floor-division loss)."""
+up to documented floor-division loss), and the long-id proxy the graph
+gates iterate on."""
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from webindex_spark.operators.pagerank import pagerank
 
@@ -63,3 +66,23 @@ def test_iteration_count_matters(spark):
     r1 = _run(spark, edges, iterations=1)
     r3 = _run(spark, edges, iterations=3)
     assert r1 != r3
+
+
+def test_long_id_proxy_maps_back_to_link_edges(spark):
+    """The graph gates iterate on ``int_link_edges``' long ids and map
+    the node-sized result back through ``int_id_to_uri``: mapping both
+    endpoints of every proxy edge gives exactly the uri link graph,
+    one proxy edge per uri edge."""
+    from webindex_spark.plans import crawl_queries as cq
+
+    sf = "/root/testdata/sf0.001"
+    src_mapped = cq.int_id_to_uri(
+        spark, sf, cq.int_link_edges(spark, sf), "src"
+    ).withColumnRenamed("__uri", "src_uri")
+    mapped = cq.int_id_to_uri(spark, sf, src_mapped, "dst").select(
+        "src_uri", F.col("__uri").alias("dst_uri")
+    )
+    got = [tuple(r) for r in mapped.collect()]
+    want = [tuple(r) for r in cq.link_edges(spark, sf).collect()]
+    assert len(got) == len(set(got)) == len(want) > 0
+    assert set(got) == set(want)

@@ -70,6 +70,15 @@ def test_fused_equals_unfused_all_modes(spark):
                 k=k, bits=bits, n_partitions=n_parts, num_partitions=8,
                 seen_prepartitioned=True, keep_cols=[],
             ),
+            "at-rest-seen-no-salt": sp.schedule_frontier(
+                frontier,
+                sp.partition_for_schedule(
+                    pre_seen, n_salts=n_salts, num_partitions=8
+                ).drop(sp.SALT_COL).localCheckpoint(),
+                bloom, robots, budget, n_salts=n_salts,
+                k=k, bits=bits, n_partitions=n_parts, num_partitions=8,
+                seen_prepartitioned=True, keep_cols=[],
+            ),
         }
         for tag, df in variants.items():
             got = {(r["uri"], r["slot"], r["tick"]) for r in df.collect()}

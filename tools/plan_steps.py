@@ -28,16 +28,10 @@ class PassThroughMat(Materializer):
     """Plan-inspection materializer: every cut/pin is the identity, so
     the full iteration lineage stays visible to explain()."""
 
-    def __init__(self):
-        super().__init__("local")
-
-    def __call__(self, df, *, force=False):
+    def __call__(self, df):
         return df
 
     def pin(self, df):
-        return df
-
-    def finish(self, df):
         return df
 
 

@@ -20,10 +20,10 @@ Scale posture (100 TB corpus, ~10^10 docs):
  - every round re-materializes the (shrinking) edge list through the
    ``materialize`` seam (operators/materialize.py) to truncate the
    iterative-join lineage — lazy executor-local by default, measured
-   fastest AND best-scaling on the N-vs-4N harness; pass
-   ``"parquet:<dir>"`` for the durable backend if executor loss
-   during the loop must be survivable (tested in
-   tests/test_materialize.py);
+   fastest AND best-scaling on the N-vs-4N harness
+   (BENCH/mat_sweep_r06.json); pass ``"parquet:<dir>"`` for the
+   durable backend if executor loss during the loop must be survivable
+   (tested in tests/test_materialize.py);
  - node ids may be any orderable type (string doc ids compare
    identically in Spark and ANSI SQL for ASCII ids); the component
    label is the MINIMUM member id, a deterministic canonical choice.
@@ -106,7 +106,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    materialize: str | Materializer = "local_lazy",
+    materialize: str | Materializer | None = None,
 ) -> DataFrame:
     """Label every node that appears in ``edges`` with its component's
     minimum node id.
@@ -129,8 +129,7 @@ def connected_components(
     e = mat(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
-        .distinct(),
-        force=True,
+        .distinct()
     )
     prev: tuple | None = None
     rounds = 0
@@ -148,7 +147,6 @@ def connected_components(
         prev = (n, h)
     else:
         raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    e = mat.finish(e)
     # fixpoint edge set is a star forest: src = member, dst = root.
     members = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     roots = e.select(F.col("dst").alias("id"), F.col("dst").alias("component"))
@@ -173,7 +171,7 @@ def dup_clusters(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 50,
-    materialize: str | Materializer = "local_lazy",
+    materialize: str | Materializer | None = None,
 ) -> DataFrame:
     """The full dedup-clustering step: near-dup pairs -> per-document
     ``(doc_id, cluster, cluster_size)`` over the WHOLE corpus, isolated

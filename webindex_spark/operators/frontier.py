@@ -294,7 +294,11 @@ def _partition_metrics(df: DataFrame, n_parts: int, uri_col: str = "uri") -> lis
 
 
 def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlConfig) -> None:
-    """Epoch 0: canonicalize seeds into the frontier; empty state tables."""
+    """Epoch 0: canonicalize seeds into the frontier; empty state tables.
+
+    "frontier" commits LAST (the sentinel rule of ``run_epoch``): it
+    existing means every other table is initialized, and a resumed
+    partial init commits only the tables a kill left missing."""
     if cat.table("frontier").exists():
         return  # already initialized (resume)
     cand = canonicalize(seeds, "url")
@@ -311,13 +315,16 @@ def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlCo
         .select(*[f.name for f in FRONTIER_SCHEMA.fields])
     )
     empty = lambda schema: spark.createDataFrame([], schema)  # noqa: E731
-    lineage = {"seeds": "input"}
-    cat.table("frontier").commit(frontier, epoch=0, lineage=lineage)
-    cat.table("seen").commit(empty(SEEN_SCHEMA), epoch=0)
-    cat.table("bloom").commit(cfg.empty_filter(spark), epoch=0)
-    cat.table("fetch_log").commit(empty(FETCH_LOG_SCHEMA), epoch=0)
-    for name, schema in delta_ops.STATE_SCHEMAS.items():
-        cat.table(name).commit(empty(schema), epoch=0)
+    tables = {
+        "seen": empty(SEEN_SCHEMA),
+        "bloom": cfg.empty_filter(spark),
+        "fetch_log": empty(FETCH_LOG_SCHEMA),
+        **{name: empty(schema) for name, schema in delta_ops.STATE_SCHEMAS.items()},
+    }
+    for name, df in tables.items():
+        if not cat.table(name).exists():
+            cat.table(name).commit(df, epoch=0)
+    cat.table("frontier").commit(frontier, epoch=0, lineage={"seeds": "input"})
 
 
 def run_epoch(

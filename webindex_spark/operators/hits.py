@@ -43,7 +43,7 @@ def hits(
     dst: str = "dst",
     iterations: int = 4,
     scale: int = 10**9,
-    materialize: str | Materializer = "local_lazy",
+    materialize: str | Materializer | None = None,
 ) -> DataFrame:
     """Fixed-point HITS over a directed edge list.
 
@@ -71,8 +71,7 @@ def hits(
     h = mat(
         srcs.select(
             "id", F.lit(scale // max(n_src, 1)).cast("long").alias("h")
-        ),
-        force=True,
+        )
     )
 
     # per iteration: each half-step's raw vector feeds BOTH its L1
@@ -109,7 +108,6 @@ def hits(
             .select("id", F.expr("raw div g").cast("long").alias("h"))
         )
 
-    h = mat.finish(h)
     # h covers every node with out-edges, a every node with in-edges;
     # their full outer join is exactly srcs ∪ dsts — the node set —
     # without recomputing the edge derivation for a separate distinct

@@ -33,7 +33,7 @@ def kcore_peel(
     rounds: int | None = 6,
     src: str = "src",
     dst: str = "dst",
-    materialize: str | Materializer = "local_lazy",
+    materialize: str | Materializer | None = None,
     broadcast_nodes: bool = True,
 ) -> DataFrame:
     """Peel nodes of degree < ``k`` for ``rounds`` rounds over the
@@ -97,7 +97,6 @@ def kcore_peel(
             converged = True
             break
         n_edges = n2
-    e = mat.finish(e)
     deg = (
         e.select(F.col("a").alias("id"))
         .union(e.select(F.col("b").alias("id")))
@@ -119,7 +118,7 @@ def hop_distances(
     src: str = "src",
     dst: str = "dst",
     directed: bool = True,
-    materialize: str | Materializer = "local_lazy",
+    materialize: str | Materializer | None = None,
 ) -> DataFrame:
     """Multi-source BFS: ``(id, dist)`` — the minimum number of link
     hops from any seed, for every node within ``rounds`` hops (nodes
@@ -143,25 +142,23 @@ def hop_distances(
     e = mat.pin(e.distinct().repartition("u"))
     dist = mat(
         seeds.toDF("id").distinct()
-        .select("id", F.lit(0).cast("long").alias("dist")),
-        force=True,
+        .select("id", F.lit(0).cast("long").alias("dist"))
     )
     frontier = dist
     r = 0
     while rounds is None or r < rounds:
         r += 1
-        # the frontier is force-cut (never cadence-pinned): isEmpty()
-        # probes it and the NEXT round's anti-join + union both read it
+        # the frontier is cut: isEmpty() probes it and the NEXT round's
+        # anti-join + union both read it
         reached = mat(
             e.join(frontier, e.u == frontier.id)
             .select(F.col("v").alias("id"))
             .distinct()
             .join(dist, "id", "left_anti")
-            .select("id", F.lit(r).cast("long").alias("dist")),
-            force=True,
+            .select("id", F.lit(r).cast("long").alias("dist"))
         )
         if reached.isEmpty():
             break
         dist = mat(dist.union(reached))
         frontier = reached
-    return mat.finish(dist)
+    return dist

@@ -20,9 +20,10 @@ rank to the last integer unit.
 
 Scale posture (10^10-node web graph):
  - the static per-edge state (src, dst, outdeg) is computed once,
-   hash-partitioned by src, and materialized (``localCheckpoint``; on a
-   real cluster use ``checkpoint()``/a parquet round-trip) so each
-   iteration shuffles only the rank table, not the edge list;
+   hash-partitioned by src, and pinned (``Materializer.pin``: a persist
+   that keeps the partitioning; a parquet round-trip under the durable
+   backend) so each iteration shuffles only the rank table, not the
+   edge list;
  - each iteration is two linear shuffles (ranks -> src partitions,
    contributions -> dst partitions) — the canonical PageRank cost; the
    driver sees ONE scalar per iteration (the dangling-mass sum, an
@@ -50,7 +51,7 @@ def pagerank(
     iterations: int = 5,
     damping: int = 85,
     scale: int = 10**12,
-    materialize: str | Materializer = "local_lazy",
+    materialize: str | Materializer | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over a directed edge list.
 
@@ -66,10 +67,9 @@ def pagerank(
     is one.
 
     ``materialize`` selects the lineage-truncation backend (see
-    operators/materialize.py): ``"local"`` for single-app runs,
-    ``"parquet:<dir>"`` for the durable seam a preemptible cluster
-    needs, or a preconfigured :class:`Materializer` (e.g. cadence
-    ``every=2`` to halve the barrier count on large graphs).
+    operators/materialize.py): ``None`` (lazy executor-local) for
+    single-app runs, ``"parquet:<dir>"`` for the durable seam a
+    preemptible cluster needs, or a :class:`Materializer` instance.
     """
     mat = Materializer.of(materialize)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -137,4 +137,4 @@ def pagerank(
                 .alias("rank"),
             )
         )
-    return mat.finish(ranks).select("id", "rank")
+    return ranks.select("id", "rank")

@@ -259,6 +259,22 @@ def schedule_frontier(
         and filter_bytes > seen_ops.BROADCAST_BLOOM_MAX_BYTES
     )
 
+    # the seen side of the exact anti-join, on the (host, salt) layout
+    # both regimes share
+    if seen is None:
+        s = None
+    elif seen_prepartitioned and SALT_COL in seen.columns:
+        s = seen.select(uri_col, host_col, SALT_COL)
+    elif seen_prepartitioned:
+        s = seen.select(uri_col, host_col).withColumn(
+            SALT_COL, salt_col(uri_col, n_salts)
+        )
+    else:
+        s = partition_for_schedule(
+            seen.select(uri_col, host_col), uri_col, host_col,
+            n_salts, num_partitions,
+        )
+
     if cogroup_mode:
         # 10^10 sizing, ONE candidate-sized exchange total: the filter
         # shards are keyed by host_salt_pid — the SAME (host, salt)
@@ -289,46 +305,21 @@ def schedule_frontier(
         # (measured N->4N collapse to ~0.5 with 4N passes swinging 2x)
         # and cost ~1 GB of block storage per pass under an eager one.
         unseen = out.drop("maybe_seen")
-        if seen is not None:
-            if seen_prepartitioned and SALT_COL in seen.columns:
-                s = seen.select(uri_col, host_col, SALT_COL)
-            elif seen_prepartitioned:
-                s = seen.select(uri_col, host_col).withColumn(
-                    SALT_COL, salt_col(uri_col, n_salts)
-                )
-            else:
-                s = partition_for_schedule(
-                    seen.select(uri_col, host_col), uri_col, host_col,
-                    n_salts, num_partitions,
-                )
-            unseen = unseen.join(s, [uri_col, host_col, SALT_COL], "left_anti")
     else:
         # broadcast-filter regime: the exact anti-join is exchange-free on
         # the shared (host, salt) partitioning, so a bloom pre-probe would
         # prune nothing (every candidate continues into the windows either
         # way) — the exact tier alone is the optimal plan here
-        cand = partition_for_schedule(
+        unseen = partition_for_schedule(
             allowed, uri_col, host_col, n_salts, num_partitions
         )
-        if seen is None:
-            unseen = cand
-        else:
-            if seen_prepartitioned and SALT_COL in seen.columns:
-                s = seen.select(uri_col, host_col, SALT_COL)
-            else:
-                s = seen.select(uri_col, host_col)
-                if not seen_prepartitioned:
-                    s = partition_for_schedule(
-                        s, uri_col, host_col, n_salts, num_partitions
-                    )
-                else:
-                    s = s.withColumn(SALT_COL, salt_col(uri_col, n_salts))
-            # NOTE: plain sort-merge, no shuffle_hash hint — SHJ's required
-            # distribution rejects subset co-partitioning and re-shuffles
-            # the big side on the full join keys (measured); SMJ accepts
-            # the (host, salt) partitioning, and its in-partition sorts are
-            # CPU that scales with cores, unlike an exchange.
-            unseen = cand.join(s, [uri_col, host_col, SALT_COL], "left_anti")
+    if s is not None:
+        # NOTE: plain sort-merge, no shuffle_hash hint — SHJ's required
+        # distribution rejects subset co-partitioning and re-shuffles
+        # the big side on the full join keys (measured); SMJ accepts
+        # the (host, salt) partitioning, and its in-partition sorts are
+        # CPU that scales with cores, unlike an exchange.
+        unseen = unseen.join(s, [uri_col, host_col, SALT_COL], "left_anti")
 
     from webindex_spark.operators import politeness
 

@@ -295,17 +295,16 @@ def pagerank_throughput_job(
     n_edges: int,
     iterations: int = 5,
     tmp_dir: str = "/tmp/webindex_bench_edges",
-    materialize="local",
 ) -> tuple[int, float]:
     """Returns (edge_iterations, wall_seconds) for the fixed-point
     PageRank loop — the representative bounded-round iterative graph
     job (two linear shuffles + one scalar probe per iteration, lineage
-    truncated on the ``materialize`` backend's cadence)."""
+    truncated every round)."""
     from webindex_spark.operators.pagerank import pagerank
 
     edges = _bench_edges(spark, n_edges, tmp_dir)
     t0 = time.time()
-    out = pagerank(edges, iterations=iterations, materialize=materialize)
+    out = pagerank(edges, iterations=iterations)
     out.write.format("noop").mode("overwrite").save()
     dt = time.time() - t0
     unpersist_all(spark)
@@ -316,7 +315,6 @@ def components_throughput_job(
     spark: SparkSession,
     n_edges: int,
     tmp_dir: str = "/tmp/webindex_bench_edges",
-    materialize="local",
 ) -> tuple[int, float]:
     """Returns (edges_processed, wall_seconds) for connected components
     (large-star/small-star to the fixpoint) over a skewed graph: the
@@ -333,9 +331,7 @@ def components_throughput_job(
         ((F.col("id") + 1) * 64 % n_nodes).alias("dst"),
     )
     t0 = time.time()
-    out = connected_components(
-        edges.unionByName(spine), materialize=materialize
-    )
+    out = connected_components(edges.unionByName(spine))
     # rounds are data-determined; normalize throughput by counting them
     rounds = getattr(out, "_wix_cc_rounds", None)
     out.write.format("noop").mode("overwrite").save()
