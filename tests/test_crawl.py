@@ -174,58 +174,14 @@ def test_metrics_manifest(spark, crawled):
     assert man["lineage"]["frontier"] == N_EPOCHS - 1
 
 
-# run_epoch commits pages_state, fetched_images, fetch_log, seen, bloom,
-# then the cascade's index_pages, index_rows, domain_counts, uri_counts,
-# and frontier last: a kill after 3 commits lands before seen, after 5..8
-# before each cascade table, after 9 before frontier
-@pytest.mark.parametrize("kill_after", [3, 5, 6, 7, 8, 9])
-def test_resume_after_kill(spark, world, tmp_path_factory, crawled, kill_after):
-    """Kill mid-epoch (after ``kill_after`` of 10 commits), rerun, final
-    state identical — and completed epochs are not re-executed (no
-    refetching)."""
-    corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
-    cat_full, _ = crawled
-    root = str(tmp_path_factory.mktemp("crawl_kill"))
-    cat = Catalog(root)
-    cfg = crawl_cfg()
-
-    # run 1 epoch cleanly
-    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
-
-    # epoch 2 killed after ``kill_after`` commits
-    commits = {"n": 0}
-    orig_commit = SnapshotTable.commit
-
-    def dying_commit(self, df, **kw):
-        if commits["n"] >= kill_after:
-            raise RuntimeError("simulated kill")
-        commits["n"] += 1
-        return orig_commit(self, df, **kw)
-
-    SnapshotTable.commit = dying_commit
-    try:
-        with pytest.raises(RuntimeError, match="simulated kill"):
-            frontier_ops.run_epoch(spark, cat, corpus, images, robots, 2, cfg)
-    finally:
-        SnapshotTable.commit = orig_commit
-
-    # some tables are at epoch 2, the core sentinels are not
-    assert cat.table("pages_state").epoch_of_head() == 2
-    assert cat.table("frontier").epoch_of_head() == 1
-
-    # resume: full run to N_EPOCHS; epoch-1 tables must not be recommitted
-    snap_before = cat.table("frontier").head()
-    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg)
-    history = cat.table("frontier").history()
-    epochs = [m["epoch"] for m in history]
-    assert epochs == [0, 1, 2, 3]  # exactly one commit per epoch — no redo
-    assert cat.table("frontier").head() == snap_before + 2
-
-    # final state equals the uninterrupted run
-    for t in (
-        "seen", "fetch_log", "uri_counts", "frontier",
-        "index_pages", "domain_counts", "index_rows",
-    ):
+def _assert_same_crawl(spark, cat, cat_full):
+    """Every table's epoch history and rows equal the uninterrupted run's:
+    nothing was committed twice and no completed epoch was re-executed."""
+    for t in frontier_ops.TABLES:
+        assert (
+            [m["epoch"] for m in cat.table(t).history()]
+            == [m["epoch"] for m in cat_full.table(t).history()]
+        ), t
         # index_pages carries its outbound_links array: freeze it to hash
         a, b = (
             {tuple(tuple(v) if isinstance(v, list) else v for v in r)
@@ -235,45 +191,86 @@ def test_resume_after_kill(spark, world, tmp_path_factory, crawled, kill_after):
         assert a == b, t
 
 
-def test_resume_after_init_kill(spark, world, tmp_path_factory, crawled):
-    """Kill ``init_crawl`` after its first commit, rerun: "frontier" is
-    the init's last commit, so the resumed run finishes the missing
-    epoch-0 tables, commits none twice, and ends equal to the
-    uninterrupted run."""
+@pytest.mark.parametrize(
+    "failed", ["pages_state", "seen", "bloom", "index_rows", "uri_counts", "frontier"]
+)
+def test_resume_after_kill(
+    spark, world, tmp_path_factory, crawled, monkeypatch, fail_commits, failed
+):
+    """Epoch 2's ``failed`` commit dies while the other nine overlapped
+    commits publish: the error names the table, the epoch is not done,
+    and the resumed run ends equal to the uninterrupted run without
+    re-executing (refetching) a completed epoch."""
+    corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
+    cat_full, _ = crawled
+    cat = Catalog(str(tmp_path_factory.mktemp("crawl_kill")))
+    cfg = crawl_cfg()
+    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
+
+    real_commit = fail_commits({failed}, epoch=2)
+    with pytest.raises(RuntimeError, match="simulated crash") as err:
+        frontier_ops.run_epoch(spark, cat, corpus, images, robots, 2, cfg)
+    monkeypatch.setattr(SnapshotTable, "commit", real_commit)
+    assert any(failed in n for n in getattr(err.value, "__notes__", []))
+    for t in frontier_ops.TABLES:
+        assert cat.table(t).epoch_of_head() == (1 if t == failed else 2), t
+
+    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg)
+    _assert_same_crawl(spark, cat, cat_full)
+
+
+def test_resume_after_init_kill(
+    spark, world, tmp_path_factory, crawled, monkeypatch, fail_commits
+):
+    """``seen``'s epoch-0 commit dies while the rest of ``init_crawl``
+    publishes: the resumed run commits only the missing table and ends
+    equal to the uninterrupted run."""
     corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
     cat_full, _ = crawled
     cat = Catalog(str(tmp_path_factory.mktemp("crawl_init_kill")))
     cfg = crawl_cfg()
 
-    commits = {"n": 0}
-    orig_commit = SnapshotTable.commit
-
-    def dying_commit(self, df, **kw):
-        if commits["n"] >= 1:
-            raise RuntimeError("simulated kill")
-        commits["n"] += 1
-        return orig_commit(self, df, **kw)
-
-    SnapshotTable.commit = dying_commit
-    try:
-        with pytest.raises(RuntimeError, match="simulated kill"):
-            frontier_ops.init_crawl(spark, cat, seeds, cfg)
-    finally:
-        SnapshotTable.commit = orig_commit
-    assert not cat.table("frontier").exists()
+    real_commit = fail_commits({"seen"}, epoch=0)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        frontier_ops.init_crawl(spark, cat, seeds, cfg)
+    monkeypatch.setattr(SnapshotTable, "commit", real_commit)
+    assert [t for t in frontier_ops.TABLES if not cat.table(t).exists()] == [
+        "seen", "pages_state", "fetched_images",
+    ]
 
     frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg)
-    for t in frontier_ops.TABLES:
-        assert (
-            [m["epoch"] for m in cat.table(t).history()]
-            == [m["epoch"] for m in cat_full.table(t).history()]
-        ), t
-        a, b = (
-            {tuple(tuple(v) if isinstance(v, list) else v for v in r)
-             for r in c.table(t).read(spark).collect()}
-            for c in (cat, cat_full)
-        )
-        assert a == b, t
+    _assert_same_crawl(spark, cat, cat_full)
+
+
+def test_epochs_and_batches_leave_no_cached_frames(
+    spark, world, tmp_path_factory, monkeypatch, fail_commits
+):
+    """A stream micro-batch, a crawl epoch and a crawl epoch whose commit
+    fails each leave Spark's CacheManager empty."""
+    import os
+
+    from webindex_spark.sources.pages_json import read_pages_json
+    from webindex_spark.streaming import page_stream
+
+    corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
+    cache_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty
+    spark.catalog.clearCache()
+
+    cat = Catalog(str(tmp_path_factory.mktemp("stream_cache")))
+    page_stream._empty_state(spark, cat)
+    pages = os.path.join(os.path.dirname(__file__), "golden", "5-pages.txt")
+    page_stream.apply_page_batch(spark, cat, read_pages_json(spark, pages), batch_id=0)
+    assert cache_empty()
+
+    cat = Catalog(str(tmp_path_factory.mktemp("crawl_cache")))
+    cfg = crawl_cfg()
+    frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
+    assert cache_empty()
+
+    fail_commits({"frontier"}, epoch=2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        frontier_ops.run_epoch(spark, cat, corpus, images, robots, 2, cfg)
+    assert cache_empty()
 
 
 MERGE_TABLES = (
@@ -334,14 +331,15 @@ def test_resume_after_compaction_crash(
 def test_crawl_with_compaction_identical(spark, world, tmp_path_factory, crawled):
     """compact_every folds each mutating table's merge chain back to one
     segment inside the epoch loop; the crawl outcome (frontier, seen,
-    uri_counts, fetch_log) must be byte-identical to the uncompacted run
-    and every mutating HEAD must actually be a compaction commit."""
+    uri_counts, fetch_log) must be byte-identical to the uncompacted run,
+    every mutating HEAD must actually be a compaction commit, and the
+    compactions keep the epochs' meters."""
     corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
     cat_plain, _ = crawled
     cat = Catalog(str(tmp_path_factory.mktemp("crawl_compact")))
     cfg = crawl_cfg()
     cfg.compact_every = 1
-    frontier_ops.run_crawl(
+    meters = frontier_ops.run_crawl(
         spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg
     )
     for t in ("frontier", "seen", "uri_counts", "fetch_log", "domain_counts"):
@@ -352,6 +350,12 @@ def test_crawl_with_compaction_identical(spark, world, tmp_path_factory, crawled
         man = cat.table(t).manifest()
         assert man.get("compaction") is True, t
         assert len(man["segments"]) == 1, t
+        assert man["partition_metrics"], t
+    # every HEAD is a compaction: a run over the finished catalog still
+    # reports each epoch's own meters
+    assert frontier_ops.run_crawl(
+        spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg
+    ) == meters
 
 
 def test_bloom_odelta_merge_commits(spark, crawled):

@@ -58,19 +58,6 @@ def _two_files(tmp_path):
     return f_a, f_b
 
 
-def _fail_commits(monkeypatch, tables, epoch):
-    """Make the commits of ``tables`` at ``epoch`` die before publishing."""
-    real_commit = SnapshotTable.commit
-
-    def crashing(self, df, **kw):
-        if self.name in tables and kw.get("epoch") == epoch:
-            raise RuntimeError(f"simulated crash between table commits ({self.name})")
-        return real_commit(self, df, **kw)
-
-    monkeypatch.setattr(SnapshotTable, "commit", crashing)
-    return real_commit
-
-
 def _assert_equals_batch(spark, cat, pages):
     want_uc, want_dc, want_rows = (
         _snap(d) for d in index_batch.build_index(pages, cache=False)
@@ -81,8 +68,10 @@ def _assert_equals_batch(spark, cat, pages):
 
 
 @pytest.mark.parametrize("crashed", page_stream.STREAM_TABLES)
-def test_partial_crash_replay_recovers_all_tables(spark, tmp_path, monkeypatch, crashed):
-    """Crash BETWEEN the four per-table commits of a micro-batch: the
+def test_partial_crash_replay_recovers_all_tables(
+    spark, tmp_path, monkeypatch, fail_commits, crashed
+):
+    """Crash ONE of the four overlapped commits of a micro-batch: the
     replay must re-derive the same deltas (inputs pinned below batch_id,
     not read at HEAD) and publish the tables the crash skipped — the
     streamed state still equals a from-scratch batch recompute."""
@@ -97,7 +86,7 @@ def test_partial_crash_replay_recovers_all_tables(spark, tmp_path, monkeypatch, 
     # three tables (committed concurrently) publish: the most dangerous
     # partial state — replay must pin its reads BELOW batch 1 even though
     # those tables' HEADs already sit AT batch 1
-    real_commit = _fail_commits(monkeypatch, {crashed}, epoch=1)
+    real_commit = fail_commits({crashed}, epoch=1)
     with pytest.raises(RuntimeError, match="simulated crash"):
         page_stream.apply_page_batch(
             spark, cat, read_pages_json(spark, str(f_b)), batch_id=1
@@ -113,7 +102,7 @@ def test_partial_crash_replay_recovers_all_tables(spark, tmp_path, monkeypatch, 
     _assert_equals_batch(spark, cat, read_pages_json(spark, str(tmp_path / "*.json")))
 
 
-def test_concurrent_commit_failures_all_reported(spark, tmp_path, monkeypatch):
+def test_concurrent_commit_failures_all_reported(spark, tmp_path, fail_commits):
     """Two of the overlapped commits fail: the first error propagates with
     its own type, and the raised error names BOTH failed tables."""
     f_a, f_b = _two_files(tmp_path)
@@ -122,7 +111,7 @@ def test_concurrent_commit_failures_all_reported(spark, tmp_path, monkeypatch):
     page_stream.apply_page_batch(
         spark, cat, read_pages_json(spark, str(f_a)), batch_id=0
     )
-    _fail_commits(monkeypatch, {"uri_counts", "index_rows"}, epoch=1)
+    fail_commits({"uri_counts", "index_rows"}, epoch=1)
     with pytest.raises(RuntimeError, match="simulated crash") as err:
         page_stream.apply_page_batch(
             spark, cat, read_pages_json(spark, str(f_b)), batch_id=1
@@ -131,13 +120,13 @@ def test_concurrent_commit_failures_all_reported(spark, tmp_path, monkeypatch):
     assert "uri_counts" in report and "index_rows" in report
 
 
-def test_empty_state_finishes_a_crashed_init(spark, tmp_path, monkeypatch):
+def test_empty_state_finishes_a_crashed_init(spark, tmp_path, monkeypatch, fail_commits):
     """A crash during the concurrent init commits leaves one table
     uninitialized; the next ``_empty_state`` probes every table, commits
     the missing one, and batch 0 then equals a batch build."""
     f_a, _ = _two_files(tmp_path)
     cat = Catalog(str(tmp_path / "cat"))
-    real_commit = _fail_commits(monkeypatch, {"domain_counts"}, epoch=-1)
+    real_commit = fail_commits({"domain_counts"}, epoch=-1)
     with pytest.raises(RuntimeError, match="simulated crash"):
         page_stream._empty_state(spark, cat)
     monkeypatch.setattr(SnapshotTable, "commit", real_commit)

@@ -27,12 +27,11 @@ Semantics beyond the reference, kept deliberately small:
   manifest row; other files in the partition keep copying (the
   reference's try/catch-per-file).
 
-The source/destination here are filesystem paths: the sandbox has no
-network, so the S3/HTTP client of the reference is environment-blocked
-— but the distributed machinery (partitioning, resume, atomicity,
-manifest) is the operator, and an ``opener`` seam lets a real
-deployment swap in ``s3fs``/``smart_open`` streams without touching
-the plan.
+The source/destination here are local filesystem paths, opened with
+``open``: the S3/HTTP client of the reference is not reproduced.  The
+distributed machinery (partitioning, resume, atomicity, manifest) is the
+operator; reading S3 would mean replacing the per-file ``open`` calls
+of the copy task, the plan stays the same.
 
 100 TB posture: one task per ~file-group, zero shuffles, no driver
 data; the manifest (one row per file) is the only thing collected, and

@@ -49,7 +49,7 @@ from webindex_spark.operators.index_batch import INDEX_ROW_SCHEMA, PAGE_SCHEMA
 DELTA_SCHEMA = T.StructType(PAGE_SCHEMA.fields + [T.StructField("op", T.StringType(), False)])
 
 # the empty state of the four tables ``cascade`` maintains, in the order
-# of its outputs (the crawl's commit order)
+# of its outputs (the order the crawl submits their commits in)
 STATE_SCHEMAS = {
     "index_pages": PAGE_SCHEMA,
     "index_rows": INDEX_ROW_SCHEMA,
@@ -76,7 +76,7 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
         F.struct("url", "uri", "outbound_links", "crawl_date", "server", "title").alias("cur_page"),
         F.coalesce(F.col("outbound_links"), F.array().cast(PAGE_SCHEMA["outbound_links"].dataType)).alias("cur_links"),
     )
-    j = d.join(s, "uri", "left").cache()
+    j = d.join(s, "uri", "left")
 
     is_del = F.col("op") == "delete"
     cur_exists = F.col("cur_page").isNotNull()
@@ -102,7 +102,7 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
         ).alias("deleted_links"),
         F.when(is_del, F.lit(-1)).when(~cur_exists, F.lit(1)).otherwise(F.lit(0))
         .cast("long").alias("d_docs"),
-    ).cache()
+    ).localCheckpoint(eager=False)  # feeds uri_deltas and page_mutations
 
     # uri deltas: the page's own docs delta + ±1 per added/deleted link target
     own = with_diffs.select("uri", F.lit(0).cast("long").alias("d_links"), F.col("d_docs"))

@@ -13,13 +13,13 @@ crawl_delay — so local[1], local[32], and a 1000-executor cluster produce
 the SAME fetch log and the SAME seen set (asserted in tests against a pure
 python model).  Nothing reads wall-clock or partition/task identity.
 
-Resume: ``run_crawl`` consults each table's committed epoch before running
-an epoch job and reads its *inputs* pinned at the last snapshot below
-epoch e (``SnapshotTable.read_before_epoch``), so a run killed between the
-10 per-epoch commits re-runs only the interrupted epoch (same inputs =>
-same outputs, commits of already-done tables are skipped) and never
-refetches completed epochs.  That is the Iceberg-
-snapshot checkpoint contract of BASELINE.json, on the snapshots seam.
+Resume: an epoch publishes its 10 tables in one overlapped commit and is
+done once every table carries it (``Catalog.done``).  ``run_crawl`` skips
+done epochs, and an epoch job reads its *inputs* pinned below epoch e
+(``SnapshotTable.read_before_epoch``), so a killed run re-runs only the
+interrupted epoch (same inputs => same outputs, published tables are
+skipped) and never refetches completed epochs: the Iceberg-snapshot
+checkpoint contract of BASELINE.json, on the snapshots seam.
 
 Physical note: this loop schedules the ALREADY-deduped frontier (robots +
 politeness only — no seen join needed there) and unseen-filters the newly
@@ -44,7 +44,6 @@ xxhash64(uri) % n, a physical-layout-independent partition id).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import partial
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
@@ -54,7 +53,7 @@ from webindex_spark.functions.spark_udfs import parse_url
 from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators import politeness, robots as robots_ops, seen as seen_ops
 from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
-from webindex_spark.sources.snapshots import Catalog, overlapped
+from webindex_spark.sources.snapshots import Catalog
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -107,6 +106,8 @@ TABLES = [
     "fetched_images", "uri_counts", "domain_counts",
     "index_pages", "index_rows",
 ]
+# pages_state and fetched_images start at their first epoch-1 append
+INIT_TABLES = [t for t in TABLES if t not in ("pages_state", "fetched_images")]
 
 
 @dataclass
@@ -296,11 +297,10 @@ def _partition_metrics(df: DataFrame, n_parts: int, uri_col: str = "uri") -> lis
 def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlConfig) -> None:
     """Epoch 0: canonicalize seeds into the frontier; empty state tables.
 
-    "frontier" commits LAST (the sentinel rule of ``run_epoch``): it
-    existing means every other table is initialized, and a resumed
+    All eight tables publish in one overlapped epoch-0 commit; a resumed
     partial init commits only the tables a kill left missing."""
-    if cat.table("frontier").exists():
-        return  # already initialized (resume)
+    if cat.done(INIT_TABLES, 0):
+        return  # already initialized: never rebuild the empty filter
     cand = canonicalize(seeds, "url")
     frontier = (
         cand.groupBy("uri")
@@ -320,11 +320,11 @@ def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlCo
         "bloom": cfg.empty_filter(spark),
         "fetch_log": empty(FETCH_LOG_SCHEMA),
         **{name: empty(schema) for name, schema in delta_ops.STATE_SCHEMAS.items()},
+        "frontier": frontier,
     }
-    for name, df in tables.items():
-        if not cat.table(name).exists():
-            cat.table(name).commit(df, epoch=0)
-    cat.table("frontier").commit(frontier, epoch=0, lineage={"seeds": "input"})
+    cat.commit_epoch(
+        spark, 0, {name: (df, "full", None, None) for name, df in tables.items()}
+    )
 
 
 def run_epoch(
@@ -339,7 +339,6 @@ def run_epoch(
     """One crawl tick. Inputs are read pinned below ``epoch``; every output
     table is committed with this epoch. Idempotent: tables already at
     ``epoch`` are left untouched (crash-resume re-entry)."""
-    prev = epoch - 1
 
     def read(name: str) -> DataFrame:
         return cat.table(name).read_before_epoch(spark, epoch)
@@ -500,15 +499,8 @@ def run_epoch(
     )
 
     # ------------------------------------------------------------- commits
-    lineage = {t: prev for t in TABLES}
-    # Commit order matters for crash-resume: run_crawl's done-check watches
-    # the five core tables, and "frontier" commits LAST, so done ⇒ every
-    # earlier commit (incl. pages_state/fetched_images) already published.
-    # Compactions may follow "frontier", overlapped: each is a mode="full"
-    # commit of the same rows under the same epoch tag, so the done-check
-    # never sees it, and a kill part-way only leaves some chains
-    # uncompacted, which merge-on-read reads correctly.
-    #
+    # One overlapped commit of all ten tables (Catalog.commit_epoch); the
+    # epoch is done once every table carries it, so no commit order matters.
     # Every per-epoch commit is O(delta) write volume:
     #   * monotone tables (seen / fetch_log / pages_state / fetched_images)
     #     append ONLY this epoch's rows (Iceberg: fast-append);
@@ -543,28 +535,16 @@ def run_epoch(
         },
         "frontier": (frontier_upserts, "merge", ["uri"], frontier_tombstones),
     }
-    compactions = {}
-    for name, (df, mode, keys, dels) in outputs.items():
-        t = cat.table(name)
-        if t.epoch_of_head() is not None and t.epoch_of_head() >= epoch:
-            continue  # already committed by a previous (killed) run
-        if mode == "append" and not t.exists():
-            mode = "full"
-        t.commit(
-            df, epoch=epoch, lineage=lineage, metrics=metrics,
-            partition_metrics=part_metrics, mode=mode,
-            merge_keys=keys, deletes=dels,
+    try:
+        cat.commit_epoch(
+            spark, epoch, outputs,
+            compact=bool(cfg.compact_every) and epoch % cfg.compact_every == 0,
+            lineage={t: epoch - 1 for t in TABLES}, metrics=metrics,
+            partition_metrics=part_metrics,
         )
-        if (
-            mode == "merge"
-            and cfg.compact_every
-            and epoch % cfg.compact_every == 0
-        ):
-            compactions[name] = partial(t.compact, spark)
-    overlapped(compactions)
-
-    for c in (gated, scheduled, fetched_pages, newly_seen):
-        c.unpersist()
+    finally:
+        for c in (gated, scheduled, fetched_pages, newly_seen):
+            c.unpersist()
     return metrics
 
 
@@ -579,19 +559,15 @@ def run_crawl(
     cfg: CrawlConfig | None = None,
 ) -> list[dict]:
     """Crawl for ``n_epochs`` with resume: epochs whose outputs are all
-    committed are skipped entirely (no refetch after a kill)."""
+    committed are skipped entirely (no refetch after a kill) and report
+    the meters their own snapshot recorded."""
     cfg = cfg or CrawlConfig()
     init_crawl(spark, cat, seeds, cfg)
     all_metrics = []
     for epoch in range(1, n_epochs + 1):
-        done = all(
-            cat.table(t).exists() and (cat.table(t).epoch_of_head() or -1) >= epoch
-            for t in ("frontier", "seen", "bloom", "fetch_log", "uri_counts")
-        )
-        if done:
-            all_metrics.append(cat.table("frontier").manifest().get("metrics", {}))
-            continue
-        all_metrics.append(
-            run_epoch(spark, cat, corpus, images, robots, epoch, cfg)
-        )
+        if cat.done(TABLES, epoch):
+            t = cat.table("frontier")
+            all_metrics.append(t.manifest(t.snapshot_before_epoch(epoch + 1))["metrics"])
+        else:
+            all_metrics.append(run_epoch(spark, cat, corpus, images, robots, epoch, cfg))
     return all_metrics

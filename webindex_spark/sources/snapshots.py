@@ -26,7 +26,10 @@ properties the resume logic relies on:
     every segment scan from the recorded schema, so building a read
     launches no Spark job (no per-segment parquet-footer inference), and
     an append/merge commit whose columns disagree with it is refused
-    before anything is written.
+    before anything is written;
+  * **one epoch commit** (``Catalog.commit_epoch``): a crawl epoch or a
+    stream micro-batch publishes all its tables in one overlapped commit,
+    done once every table's HEAD carries the epoch (``Catalog.done``).
 
 This mirrors the role Fluo's MVCC transactions + sequenced export queue
 play in the reference (PageObserver.java:72-124, IndexClient.java:250-306):
@@ -41,7 +44,7 @@ import os
 import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from functools import reduce
+from functools import partial, reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -304,16 +307,17 @@ class SnapshotTable:
 
     def compact(self, spark: SparkSession) -> int:
         """Fold the segment chain back into ONE full segment (Iceberg
-        rewrite_data_files): reads the reconciled state and commits it
-        ``mode="full"`` under the SAME epoch tag as HEAD, marked
-        ``compaction`` in the manifest.  Amortizes merge-on-read
-        amplification; safe at any point because readers of older
-        snapshots keep their immutable segment lists."""
+        rewrite_data_files): commits the reconciled state ``mode="full"``
+        with HEAD's epoch tag, lineage and meters, marked ``compaction``.
+        Amortizes merge-on-read amplification; safe at any point because
+        readers of older snapshots keep their immutable segment lists."""
         head_man = self.manifest()
         return self.commit(
             self.read(spark),
             epoch=head_man.get("epoch"),
             lineage=head_man.get("lineage"),
+            metrics=head_man.get("metrics"),
+            partition_metrics=head_man.get("partition_metrics"),
             mode="full",
             extra={"compaction": True},
         )
@@ -386,3 +390,28 @@ class Catalog:
 
     def table(self, name: str) -> SnapshotTable:
         return SnapshotTable(self.root, name)
+
+    def done(self, tables, epoch: int) -> bool:
+        """Whether every table's HEAD is tagged ``epoch`` or later."""
+        heads = [self.table(t).epoch_of_head() for t in tables]
+        return all(e is not None and e >= epoch for e in heads)
+
+    def commit_epoch(self, spark: SparkSession, epoch: int, outputs: dict, *,
+                     compact: bool = False, **manifest) -> None:
+        """Commit ``{table: (df, mode, merge_keys, deletes)}`` as ``epoch``
+        with the shared ``manifest`` kwargs, overlapped in dict order, then
+        (``compact``) compact the merge tables, overlapped.  Tables already
+        ``done`` are skipped, so a replay of a crashed epoch (inputs pinned
+        by ``read_before_epoch``) publishes only the tables left behind."""
+        todo = {t: out for t, out in outputs.items() if not self.done([t], epoch)}
+
+        def commit(name, df, mode, merge_keys, deletes):
+            t = self.table(name)  # a table's first append commits full
+            mode = "full" if mode == "append" and not t.exists() else mode
+            t.commit(df, epoch=epoch, mode=mode, merge_keys=merge_keys,
+                     deletes=deletes, **manifest)
+
+        overlapped({t: partial(commit, t, *out) for t, out in todo.items()})
+        if compact:  # same epoch, same rows: a crash here leaves the epoch done
+            overlapped({t: partial(self.table(t).compact, spark)
+                        for t, out in todo.items() if out[1] == "merge"})
