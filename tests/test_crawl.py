@@ -246,7 +246,8 @@ def test_epochs_and_batches_leave_no_cached_frames(
     spark, world, tmp_path_factory, monkeypatch, fail_commits
 ):
     """A stream micro-batch, a crawl epoch and a crawl epoch whose commit
-    fails each leave Spark's CacheManager empty."""
+    fails each leave Spark's CacheManager empty and hold no persistent RDD
+    (a cut's or a pin's) that was not held before."""
     import os
 
     from webindex_spark.sources.pages_json import read_pages_json
@@ -256,21 +257,28 @@ def test_epochs_and_batches_leave_no_cached_frames(
     cache_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty
     spark.catalog.clearCache()
 
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    held = persistent()
     cat = Catalog(str(tmp_path_factory.mktemp("stream_cache")))
     page_stream._empty_state(spark, cat)
     pages = os.path.join(os.path.dirname(__file__), "golden", "5-pages.txt")
     page_stream.apply_page_batch(spark, cat, read_pages_json(spark, pages), batch_id=0)
     assert cache_empty()
+    assert persistent() <= held
 
     cat = Catalog(str(tmp_path_factory.mktemp("crawl_cache")))
     cfg = crawl_cfg()
     frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
     assert cache_empty()
+    assert persistent() <= held
 
     fail_commits({"frontier"}, epoch=2)
     with pytest.raises(RuntimeError, match="simulated crash"):
         frontier_ops.run_epoch(spark, cat, corpus, images, robots, 2, cfg)
     assert cache_empty()
+    assert persistent() <= held
 
 
 MERGE_TABLES = (

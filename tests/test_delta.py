@@ -20,6 +20,7 @@ import pytest
 from webindex_spark.functions import urlnorm
 from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators import index_batch
+from webindex_spark.operators.materialize import Materializer
 
 
 def link(raw, anchor):
@@ -92,10 +93,11 @@ def assert_equals_batch(spark, state):
 
 
 def tick(spark, state, puts=(), deletes=()):
-    out = delta_ops.apply_page_deltas(*state, deltas_df(spark, puts, deletes))
-    # materialize each step and truncate lineage — in production every tick
-    # commits to a snapshot table (write+read), which does exactly this
-    return tuple(df.localCheckpoint(eager=True) for df in out)
+    with Materializer() as mat:
+        out = delta_ops.apply_page_deltas(*state, deltas_df(spark, puts, deletes), mat)
+        # materialize each step and truncate lineage — in production every
+        # tick commits to a snapshot table (write+read), which does exactly this
+        return tuple(df.localCheckpoint(eager=True) for df in out)
 
 
 def test_incremental_equals_batch_script(spark):
@@ -148,7 +150,8 @@ def test_anchor_only_change_emits_no_link_delta(spark):
     state = empty_state(spark)
     state = tick(spark, state, puts=[page(P_A, [link("http://b.com/1", "old")])])
     uri_deltas, muts = delta_ops.diff_pages(
-        state[0], deltas_df(spark, puts=[page(P_A, [link("http://b.com/1", "NEW")])])
+        state[0], deltas_df(spark, puts=[page(P_A, [link("http://b.com/1", "NEW")])]),
+        Materializer(),
     )
     assert uri_deltas.count() == 0  # no UriInfo change at all
     m = muts.collect()[0]
@@ -173,7 +176,8 @@ def test_reload_same_page_is_noop(spark):
 def test_domain_changes_feed_is_o_delta_and_exact(spark):
     """merge_domain_counts returns the touched-domain
     (old, new) rows the epoch metrics consume; domains_new derived from it
-    equals the brute-force old-vs-new domain-set difference."""
+    equals the brute-force old-vs-new domain-set difference, and its merge
+    commit reconciled onto the old table is the next table."""
     dc = spark.createDataFrame(
         [("com.a", 2), ("com.b", 1)], "rev_domain string, pagecount long"
     )
@@ -187,7 +191,8 @@ def test_domain_changes_feed_is_o_delta_and_exact(spark):
         "uri string, old_links long, old_docs long, new_links long, "
         "new_docs long, touched boolean",
     )
-    nxt, dchg = delta_ops.merge_domain_counts(dc, changes)
+    dchg = delta_ops.merge_domain_counts(dc, changes)
+    nxt = delta_ops.reconcile(dc, *delta_ops.domain_counts_commit(dchg))
     got_next = {(r["rev_domain"], r["pagecount"]) for r in nxt.collect()}
     assert got_next == {("com.a", 3), ("com.c", 1)}
     rows = {r["rev_domain"]: (r["old_pagecount"], r["new_pagecount"])

@@ -11,6 +11,8 @@ equality, not tolerance."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from webindex_spark.operators.components import connected_components
@@ -28,7 +30,7 @@ EDGES = (
 
 
 def _backends(tmp_path):
-    return {"local": None, "parquet": f"parquet:{tmp_path}/snaps"}
+    return {"local": None, "parquet": Materializer(f"{tmp_path}/snaps")}
 
 
 def _rows(df):
@@ -75,11 +77,9 @@ def test_parquet_backend_leaves_inspectable_snapshots(spark, tmp_path):
     out = pagerank(
         spark.createDataFrame(EDGES, ["src", "dst"]),
         iterations=3,
-        materialize=f"parquet:{snaps}",
+        materialize=Materializer(snaps),
     )
     assert out.count() > 0
-    import os
-
     dirs = sorted(os.listdir(snaps))
     # static nodes + adj + one per iteration = 5 snapshots
     assert len(dirs) == 5
@@ -111,15 +111,25 @@ def test_parquet_cut_rereads_without_a_job(spark, tmp_path, monkeypatch):
     assert _rows(cut) == _rows(df)
 
 
-def test_materializer_of_coercions(tmp_path):
-    m = Materializer()
-    assert Materializer.of(m) is m
-    assert Materializer.of(None).path is None
-    p = Materializer.of(f"parquet:{tmp_path}/x")
-    assert p.path == f"{tmp_path}/x"
-    for bad in ("local", "parquet:", "nope", 42):
-        with pytest.raises(ValueError):
-            Materializer.of(bad)
+def test_scope_exit_releases_cuts_and_pins(spark, tmp_path):
+    """Leaving a ``with Materializer()`` scope drops what it cut and
+    pinned: neither keeps a persistent RDD and the CacheManager is empty;
+    a parquet scope removes its snapshot directories."""
+    spark.catalog.clearCache()
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: E731
+    before = persistent()
+    df = spark.createDataFrame(EDGES, ["src", "dst"])
+    with Materializer() as mat:
+        cut, pinned = mat(df), mat.pin(df.repartition("src"))
+        assert cut.join(pinned, "src").count() > 0
+        assert len(persistent() - before) == 2
+    assert persistent() <= before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    with Materializer(f"{tmp_path}/snaps") as mat:
+        assert _rows(mat(df)) == _rows(df)
+        assert len(os.listdir(f"{tmp_path}/snaps")) == 1
+    assert os.listdir(f"{tmp_path}/snaps") == []
 
 
 def test_kcore_run_to_fixpoint(spark):

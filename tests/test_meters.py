@@ -21,6 +21,7 @@ import pytest
 from tests.test_delta import deltas_df, empty_state, link, page
 from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators.frontier import METER_NAMES, epoch_meters
+from webindex_spark.operators.materialize import Materializer
 
 P_A = "http://a.com/1"
 P_B = "http://b.com"
@@ -32,12 +33,13 @@ L_Z = link("http://d.com/z", "z")
 def tick(spark, state, puts=(), deletes=()):
     pages, uc, dc, ir = state
     deltas = deltas_df(spark, puts=puts, deletes=deletes)
-    outputs, feed = delta_ops.cascade(pages, uc, dc, deltas)
-    meters = epoch_meters(*feed)
-    nxt = tuple(
-        delta_ops.reconcile(df, *outputs[t]).localCheckpoint(eager=True)
-        for df, t in zip(state, ("index_pages", "uri_counts", "domain_counts", "index_rows"))
-    )
+    with Materializer() as mat:
+        outputs, feed = delta_ops.cascade(pages, uc, dc, deltas, mat)
+        meters = epoch_meters(*feed)
+        nxt = tuple(
+            delta_ops.reconcile(df, *outputs[t]).localCheckpoint(eager=True)
+            for df, t in zip(state, ("index_pages", "uri_counts", "domain_counts", "index_rows"))
+        )
     return nxt, meters
 
 

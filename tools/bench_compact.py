@@ -67,16 +67,9 @@ def run_policy(spark, root, state_df, n_epochs, n_delta, every):
         sliced = t.read(spark).join(
             F.broadcast(deltas.select("uri")), "uri", "left_semi"
         )
-        _, changes = delta_ops.merge_uri_counts(sliced, deltas)
-        changes = changes.localCheckpoint(eager=True)
-        ups = changes.where(
-            (F.col("new_links") != 0) | (F.col("new_docs") != 0)
-        ).select("uri", F.col("new_links").alias("links_to"),
-                 F.col("new_docs").alias("docs"))
-        dels = changes.where(
-            (F.col("new_links") == 0) & (F.col("new_docs") == 0)
-        ).select("uri")
-        t.commit(ups, epoch=e, mode="merge", merge_keys=["uri"], deletes=dels)
+        changes = delta_ops.merge_uri_counts(sliced, deltas).localCheckpoint(eager=True)
+        ups, keys, dels = delta_ops.uri_counts_commit(changes)
+        t.commit(ups, epoch=e, mode="merge", merge_keys=keys, deletes=dels)
         ticks.append(time.monotonic() - t0)
         if every and e % every == 0:
             t0 = time.monotonic()

@@ -97,20 +97,15 @@ def tick_uri_counts(spark, cat, name, state_df, n_delta, mode):
         sliced = t.read(spark).join(
             F.broadcast(deltas.select("uri")), "uri", "left_semi"
         )
-        _, changes = delta_ops.merge_uri_counts(sliced, deltas)
         # one state scan total: changes feeds BOTH the upsert and the
-        # delete writes (run_epoch checkpoints it for the same reason)
-        changes = changes.localCheckpoint(eager=True)
-        ups = changes.where(
-            (F.col("new_links") != 0) | (F.col("new_docs") != 0)
-        ).select("uri", F.col("new_links").alias("links_to"),
-                 F.col("new_docs").alias("docs"))
-        dels = changes.where(
-            (F.col("new_links") == 0) & (F.col("new_docs") == 0)
-        ).select("uri")
-        t.commit(ups, epoch=1, mode="merge", merge_keys=["uri"], deletes=dels)
+        # delete writes (the cascade cuts it for the same reason)
+        changes = delta_ops.merge_uri_counts(sliced, deltas).localCheckpoint(eager=True)
+        ups, keys, dels = delta_ops.uri_counts_commit(changes)
+        t.commit(ups, epoch=1, mode="merge", merge_keys=keys, deletes=dels)
     else:
-        nxt, _ = delta_ops.merge_uri_counts(t.read(spark), deltas)
+        state = t.read(spark)
+        changes = delta_ops.merge_uri_counts(state, deltas)
+        nxt = delta_ops.reconcile(state, *delta_ops.uri_counts_commit(changes))
         t.commit(nxt, epoch=1, mode="full")
     commit_s = time.monotonic() - t0
     t0 = time.monotonic()

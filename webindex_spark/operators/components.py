@@ -21,7 +21,7 @@ Scale posture (100 TB corpus, ~10^10 docs):
    ``materialize`` seam (operators/materialize.py) to truncate the
    iterative-join lineage — lazy executor-local by default, measured
    fastest AND best-scaling on the N-vs-4N harness
-   (BENCH/mat_sweep_r06.json); pass ``"parquet:<dir>"`` for the
+   (BENCH/mat_sweep_r06.json); pass ``Materializer(<dir>)`` for the
    durable backend if executor loss during the loop must be survivable
    (tested in tests/test_materialize.py);
  - node ids may be any orderable type (string doc ids compare
@@ -106,7 +106,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    materialize: str | Materializer | None = None,
+    materialize: Materializer | None = None,
 ) -> DataFrame:
     """Label every node that appears in ``edges`` with its component's
     minimum node id.
@@ -121,11 +121,11 @@ def connected_components(
     idempotent at the fixpoint, where the edge set is exactly the
     star forest {(v, component_min)}.
 
-    ``materialize`` selects the per-round lineage-truncation backend
-    (operators/materialize.py) — ``"parquet:<dir>"`` is the durable
+    ``materialize`` is the per-round lineage-truncation backend
+    (operators/materialize.py) — ``Materializer(<dir>)`` is the durable
     seam when executor loss during the loop must be survivable.
     """
-    mat = Materializer.of(materialize)
+    mat = materialize or Materializer()
     e = mat(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
@@ -171,7 +171,7 @@ def dup_clusters(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 50,
-    materialize: str | Materializer | None = None,
+    materialize: Materializer | None = None,
 ) -> DataFrame:
     """The full dedup-clustering step: near-dup pairs -> per-document
     ``(doc_id, cluster, cluster_size)`` over the WHOLE corpus, isolated

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 
 from webindex_spark.functions.spark_udfs import page_json, rev_encode, uri_rev_domain_col
 from webindex_spark.operators.index_batch import INDEX_ROW_SCHEMA, PAGE_SCHEMA
+from webindex_spark.operators.materialize import Materializer
 
 DELTA_SCHEMA = T.StructType(PAGE_SCHEMA.fields + [T.StructField("op", T.StringType(), False)])
 
@@ -58,8 +59,8 @@ STATE_SCHEMAS = {
 }
 
 
-def diff_pages(pages_state: DataFrame, deltas: DataFrame):
-    """T2. Returns (uri_deltas, page_mutations).
+def diff_pages(pages_state: DataFrame, deltas: DataFrame, mat: Materializer):
+    """T2. Returns (uri_deltas, page_mutations), cut through ``mat``.
 
     ``deltas`` must contain at most one row per uri (a batch = one Fluo
     notification sweep).  page_mutations carries what T5 needs: the op,
@@ -90,7 +91,7 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
 
     cur_keys = keys_of(cur_links)
     next_keys = keys_of(next_links)
-    with_diffs = j.select(
+    with_diffs = mat(j.select(
         "uri", "op", "next_page", "cur_page",
         F.filter(
             next_links,
@@ -102,7 +103,7 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
         ).alias("deleted_links"),
         F.when(is_del, F.lit(-1)).when(~cur_exists, F.lit(1)).otherwise(F.lit(0))
         .cast("long").alias("d_docs"),
-    ).localCheckpoint(eager=False)  # feeds uri_deltas and page_mutations
+    ))  # feeds uri_deltas and page_mutations
 
     # uri deltas: the page's own docs delta + ±1 per added/deleted link target
     own = with_diffs.select("uri", F.lit(0).cast("long").alias("d_links"), F.col("d_docs"))
@@ -125,10 +126,10 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
     return uri_deltas, page_mutations
 
 
-def merge_uri_counts(uri_counts: DataFrame, uri_deltas: DataFrame):
-    """T3. Returns (uri_counts_next, changes) where changes carries the
-    (old, new) pair per changed uri — the ChangeObserver feed."""
-    changes = (
+def merge_uri_counts(uri_counts: DataFrame, uri_deltas: DataFrame) -> DataFrame:
+    """T3. Returns ``changes``: the (old, new) pair per changed uri — the
+    ChangeObserver feed, and the input of ``uri_counts_commit``."""
+    return (
         uri_counts.join(uri_deltas, "uri", "full_outer")
         .select(
             "uri",
@@ -141,29 +142,18 @@ def merge_uri_counts(uri_counts: DataFrame, uri_deltas: DataFrame):
             ((F.coalesce("d_links", F.lit(0)) != 0) | (F.coalesce("d_docs", F.lit(0)) != 0))
             .alias("touched"),
         )
+        .where("touched")
     )
-    uri_counts_next = (
-        changes.where((F.col("new_links") != 0) | (F.col("new_docs") != 0))
-        .select(
-            "uri",
-            F.col("new_links").alias("links_to"),
-            F.col("new_docs").alias("docs"),
-        )
-    )
-    return uri_counts_next, changes.where("touched")
 
 
-def merge_domain_counts(domain_counts: DataFrame, changes: DataFrame):
-    """T4: ±1 per 0<->nonzero URI transition (UriCombineQ.java:72-77);
-    rows reaching 0 dropped (genDomainData emits nothing for 0).
+def merge_domain_counts(domain_counts: DataFrame, changes: DataFrame) -> DataFrame:
+    """T4: ±1 per 0<->nonzero URI transition (UriCombineQ.java:72-77).
 
-    Returns ``(next, domain_changes)`` where domain_changes carries
-    (rev_domain, old_pagecount, new_pagecount) for every TOUCHED domain —
-    O(delta) rows from the same full-outer join that produces the merged
-    table, so per-epoch telemetry like "domains_new" (old 0 -> new
-    nonzero) costs no extra full-table scan (the round-2 metric
-    recomputed a DISTINCT over all of uri_counts per tick just to count
-    these)."""
+    Returns ``domain_changes``: (rev_domain, old_pagecount, new_pagecount)
+    for every TOUCHED domain — O(delta) rows, so per-epoch telemetry like
+    "domains_new" (old 0 -> new nonzero) costs no extra full-table scan
+    (the round-2 metric recomputed a DISTINCT over all of uri_counts per
+    tick just to count these), and the input of ``domain_counts_commit``."""
     was_zero = (F.col("old_links") == 0) & (F.col("old_docs") == 0)
     is_zero = (F.col("new_links") == 0) & (F.col("new_docs") == 0)
     d = (
@@ -185,12 +175,7 @@ def merge_domain_counts(domain_counts: DataFrame, changes: DataFrame):
         .cast("long").alias("new_pagecount"),
         F.col("d_count").isNotNull().alias("touched"),
     )
-    nxt = merged.where(F.col("new_pagecount") != 0).select(
-        "rev_domain", F.col("new_pagecount").alias("pagecount")
-    )
-    return nxt, merged.where("touched").select(
-        "rev_domain", "old_pagecount", "new_pagecount"
-    )
+    return merged.where("touched").select("rev_domain", "old_pagecount", "new_pagecount")
 
 
 def _uri_rows(df: DataFrame, links_col: str, docs_col: str) -> DataFrame:
@@ -315,14 +300,34 @@ def _split(df: DataFrame, live: F.Column, keys: list[str], *cols):
     return df.where(live).select(*cols), keys, df.where(~live).select(*keys)
 
 
+def uri_counts_commit(changes: DataFrame):
+    """uri_counts' merge commit from ``merge_uri_counts``' changes: a uri
+    whose counters sum to ZERO is deleted (UriInfo.reduce:76-82)."""
+    return _split(
+        changes, (F.col("new_links") != 0) | (F.col("new_docs") != 0), ["uri"],
+        "uri", F.col("new_links").alias("links_to"), F.col("new_docs").alias("docs"),
+    )
+
+
+def domain_counts_commit(domain_changes: DataFrame):
+    """domain_counts' merge commit from ``merge_domain_counts``' changes: a
+    domain reaching pagecount 0 is deleted (genDomainData emits nothing)."""
+    return _split(
+        domain_changes, F.col("new_pagecount") != 0, ["rev_domain"],
+        "rev_domain", F.col("new_pagecount").alias("pagecount"),
+    )
+
+
 def cascade(
     index_pages: DataFrame,
     uri_counts: DataFrame,
     domain_counts: DataFrame,
     deltas: DataFrame,
+    mat: Materializer,
 ):
     """T2-T5 for one ``DELTA_SCHEMA`` batch (at most one row per uri)
-    against the pinned prior state.  Returns ``(outputs, feed)``:
+    against the pinned prior state, its reused frames cut through
+    ``mat``.  Returns ``(outputs, feed)``:
     ``outputs`` maps each ``STATE_SCHEMAS`` table to the delta-sized
     ``(upserts, merge_keys, deletes)`` of its ``mode="merge"`` commit
     (the ``MERGE INTO`` statements in sources/iceberg_sql.py), and
@@ -331,36 +336,29 @@ def cascade(
     # index_rows is never read: its mutations come from delta-sized inputs
     # alone, so the engine's largest table costs zero scan per batch.
     # Each delta frame that feeds both a state slice and a merge is cut
-    # with a LAZY local checkpoint: uncut, the sliced-state-joins-delta
-    # shape nests the delta's plan inside the slice's plan and the logical
-    # plan grows 2^stages.  A lazy cut replaces the plan just as an eager
-    # one does, but the first job that consumes the frame materializes
-    # and caches it instead of a barrier job per frame.  The frames are
-    # delta-sized, so a cut costs the delta, never the state.
-    deltas = deltas.localCheckpoint(eager=False)
-    uri_deltas, page_mutations = diff_pages(touched(index_pages, deltas, "uri"), deltas)
-    uri_deltas = uri_deltas.localCheckpoint(eager=False)
-    _, changes = merge_uri_counts(touched(uri_counts, uri_deltas, "uri"), uri_deltas)
-    changes = changes.localCheckpoint(eager=False)
+    # through ``mat`` (a lazy local checkpoint): uncut, the sliced-state-
+    # joins-delta shape nests the delta's plan inside the slice's plan and
+    # the logical plan grows 2^stages.  A lazy cut replaces the plan just
+    # as an eager one does, but the first job that consumes the frame
+    # materializes and caches it instead of a barrier job per frame.  The
+    # frames are delta-sized, so a cut costs the delta, never the state,
+    # and the caller's scope releases them once its commit has run.
+    deltas = mat(deltas)
+    uri_deltas, page_mutations = diff_pages(touched(index_pages, deltas, "uri"), deltas, mat)
+    uri_deltas = mat(uri_deltas)
+    changes = mat(merge_uri_counts(touched(uri_counts, uri_deltas, "uri"), uri_deltas))
     touched_domains = changes.select(uri_rev_domain_col("uri").alias("rev_domain")).distinct()
-    _, domain_changes = merge_domain_counts(
+    domain_changes = mat(merge_domain_counts(
         touched(domain_counts, touched_domains, "rev_domain"), changes
-    )
-    domain_changes = domain_changes.localCheckpoint(eager=False)
+    ))
     inserts, delete_keys = index_row_mutations(changes, domain_changes, page_mutations)
     outputs = {
         "index_pages": _split(
             deltas, F.col("op") != "delete", ["uri"], *PAGE_SCHEMA.fieldNames()
         ),
         "index_rows": (inserts, ["row", "cf", "cq"], delete_keys),
-        "domain_counts": _split(
-            domain_changes, F.col("new_pagecount") != 0, ["rev_domain"],
-            "rev_domain", F.col("new_pagecount").alias("pagecount"),
-        ),
-        "uri_counts": _split(
-            changes, (F.col("new_links") != 0) | (F.col("new_docs") != 0), ["uri"],
-            "uri", F.col("new_links").alias("links_to"), F.col("new_docs").alias("docs"),
-        ),
+        "domain_counts": domain_counts_commit(domain_changes),
+        "uri_counts": uri_counts_commit(changes),
     }
     return outputs, (page_mutations, changes, domain_changes)
 
@@ -373,11 +371,11 @@ def reconcile(state: DataFrame, upserts: DataFrame, keys: list[str], deletes: Da
     return state.join(gone, keys, "left_anti").unionByName(upserts)
 
 
-def apply_page_deltas(pages_state, uri_counts, domain_counts, index_rows, deltas):
-    """One full-state tick: ``cascade`` reconciled against each table.
-    Returns (pages_next, uri_counts_next, domain_counts_next,
-    index_rows_next)."""
-    outputs, _ = cascade(pages_state, uri_counts, domain_counts, deltas)
+def apply_page_deltas(pages_state, uri_counts, domain_counts, index_rows, deltas, mat):
+    """One full-state tick: ``cascade`` (cut through ``mat``) reconciled
+    against each table.  Returns (pages_next, uri_counts_next,
+    domain_counts_next, index_rows_next)."""
+    outputs, _ = cascade(pages_state, uri_counts, domain_counts, deltas, mat)
     return tuple(
         reconcile(df, *outputs[t]) for df, t in zip(
             (pages_state, uri_counts, domain_counts, index_rows),

@@ -53,6 +53,7 @@ from webindex_spark.functions.spark_udfs import parse_url
 from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators import politeness, robots as robots_ops, seen as seen_ops
 from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
+from webindex_spark.operators.materialize import Materializer
 from webindex_spark.sources.snapshots import Catalog
 
 FRONTIER_SCHEMA = T.StructType(
@@ -347,204 +348,196 @@ def run_epoch(
     seen_tbl = read("seen")
     bloom_tbl = read("bloom")
 
-    # 1. robots gate (broadcast join; blocked rows are dropped + marked seen
-    #    so they are never re-attempted)
-    gated = robots_ops.apply_robots(frontier, robots).cache()
-    allowed = gated.where(F.col("allowed"))
-    blocked = gated.where(~F.col("allowed"))
+    with Materializer() as mat:
+        # 1. robots gate (broadcast join; blocked rows are dropped + marked seen
+        #    so they are never re-attempted)
+        gated = mat(robots_ops.apply_robots(frontier, robots))
+        allowed = gated.where(F.col("allowed"))
+        blocked = gated.where(~F.col("allowed"))
 
-    # 2. politeness schedule: ≤ budget per host, salted two-phase ranking
-    scheduled = politeness.schedule(
-        allowed, cfg.budget, n_salts=cfg.n_salts
-    ).cache()
+        # 2. politeness schedule: ≤ budget per host, salted two-phase ranking
+        scheduled = mat(politeness.schedule(allowed, cfg.budget, n_salts=cfg.n_salts))
 
-    fetch_log = scheduled.select(
-        F.lit(epoch).cast("long").alias("epoch"),
-        "host", "uri", "slot", "tick", "is_image",
-    )
-
-    # 3. fetch = join the content tables (the sandbox's simulated fetch;
-    #    on a real crawl this is the executor-side HTTP stage)
-    fetched_pages = (
-        scheduled.where(~F.col("is_image"))
-        .select("uri", "priority")
-        .join(corpus, "uri", "inner")
-        .cache()
-    )
-    fetched_images = (
-        scheduled.where(F.col("is_image"))
-        .select(F.col("uri").alias("image_id"), F.lit(epoch).cast("long").alias("epoch"))
-        .join(images, "image_id", "inner")
-    )
-
-    # 4. link extraction -> canonical candidates (priority = parent*decay)
-    out_raw = fetched_pages.select(
-        F.col("priority"), F.explode("out_urls").alias("url")
-    )
-    children = canonicalize(out_raw, "url").select(
-        "uri", "url", "host", "path", "is_image",
-        (F.col("priority") * cfg.priority_decay).alias("priority"),
-    )
-
-    # 5. seen-set insert: everything scheduled or robots-blocked this epoch
-    newly_seen = (
-        scheduled.select("uri", "host")
-        .unionByName(blocked.select("uri", "host"))
-        .distinct()
-        .cache()
-    )
-    seen_next = seen_tbl.unionByName(newly_seen)
-    # O(delta) filter maintenance: only the shards this epoch's uris land
-    # on are recomputed (touched-slice semi-join inside filter_insert) and
-    # committed as a mode="merge" snapshot keyed on pid — the untouched
-    # ~n_partitions bitmap rows are never rewritten (the reference's
-    # touch-only-dirtied-buckets discipline, UriCombineQ.java:87-90).
-    # Eager checkpoint: the Python insert kernel feeds BOTH the in-epoch
-    # probe (via bloom_next) and the commit — without it each consumer
-    # re-runs the cogroup kernel.
-    bloom_delta = cfg.filter_insert(
-        newly_seen.select("uri"), bloom_tbl, delta_only=True
-    ).localCheckpoint(eager=True)
-    bloom_next = bloom_tbl.join(
-        F.broadcast(bloom_delta.select("pid")), "pid", "left_anti"
-    ).unionByName(bloom_delta)
-
-    # 6. frontier update, O(delta): consumed rows (scheduled + robots-
-    #    blocked) become merge-commit DELETE keys; unseen new candidates
-    #    become UPSERT rows.  A child already on the frontier gets the
-    #    merged value (max priority, min discovery epoch) via ONE
-    #    key-partitioned join of the delta-sized fresh set against the
-    #    frontier — never a groupBy over the whole remaining ∪ fresh
-    #    union (at a 10^9-row frontier that groupBy is a full-state
-    #    shuffle + rewrite per tick).  This is literally the
-    #    ``MERGE INTO frontier`` statement in sources/iceberg_sql.py:
-    #    MATCHED AND consumed -> DELETE; MATCHED -> greatest(priority);
-    #    NOT MATCHED -> INSERT.
-    fresh = cfg.filter_unseen(children, seen_next, bloom_next)
-    fresh_agg = fresh.groupBy("uri").agg(
-        F.first("url").alias("url"),
-        F.first("host").alias("host"),
-        F.first("path").alias("path"),
-        F.max("priority").alias("priority"),
-        F.first("is_image").alias("is_image"),
-    ).localCheckpoint(eager=True)
-    # old values for colliding keys only: broadcast-semi slice of the
-    # frontier (scan, no state shuffle), then a delta×delta left join
-    old_slice = delta_ops.touched(frontier, fresh_agg, "uri").select(
-        "uri",
-        F.col("priority").alias("__old_prio"),
-        F.col("discovered_epoch").alias("__old_de"),
-    )
-    frontier_upserts = (
-        fresh_agg.join(old_slice, "uri", "left")
-        .select(
-            "uri", "url", "host", "path",
-            F.greatest(
-                F.col("priority"), F.coalesce("__old_prio", F.lit(float("-inf")))
-            ).alias("priority"),
-            F.least(
-                F.lit(epoch + 1).cast("long"),
-                F.coalesce("__old_de", F.lit((1 << 62))),
-            ).cast("long").alias("discovered_epoch"),
-            "is_image",
+        fetch_log = scheduled.select(
+            F.lit(epoch).cast("long").alias("epoch"),
+            "host", "uri", "slot", "tick", "is_image",
         )
-        .select(*[f.name for f in FRONTIER_SCHEMA.fields])
-    )
-    frontier_tombstones = newly_seen.select("uri")
 
-    # 7. index maintenance: fetched pages become 'put' deltas for the
-    #    delta cascade (operators/delta.py, T1-T5) — the one chain the
-    #    stream micro-batch and the IndexIT tests run too.  index_rows is
-    #    never read: its merge commit comes from delta-sized inputs only.
-    ex = fetched_pages.select(
-        F.col("uri").alias("page_uri"), F.explode("out_urls").alias("url")
-    )
-    link_structs = canonicalize(ex, "url").select(
-        "page_uri",
-        F.struct(
-            F.col("url"), F.col("uri"), F.lit("").alias("anchor_text")
-        ).alias("l"),
-    )
-    links_by_page = link_structs.groupBy("page_uri").agg(
-        F.collect_list("l").alias("outbound_links")
-    )
-    deltas = (
-        fetched_pages.select("uri", "url", "title")
-        .join(links_by_page, fetched_pages.uri == links_by_page.page_uri, "left")
-        .select(
-            "url",
+        # 3. fetch = join the content tables (the sandbox's simulated fetch;
+        #    on a real crawl this is the executor-side HTTP stage)
+        fetched_pages = mat(
+            scheduled.where(~F.col("is_image"))
+            .select("uri", "priority")
+            .join(corpus, "uri", "inner")
+        )
+        fetched_images = (
+            scheduled.where(F.col("is_image"))
+            .select(F.col("uri").alias("image_id"), F.lit(epoch).cast("long").alias("epoch"))
+            .join(images, "image_id", "inner")
+        )
+
+        # 4. link extraction -> canonical candidates (priority = parent*decay)
+        out_raw = fetched_pages.select(
+            F.col("priority"), F.explode("out_urls").alias("url")
+        )
+        children = canonicalize(out_raw, "url").select(
+            "uri", "url", "host", "path", "is_image",
+            (F.col("priority") * cfg.priority_decay).alias("priority"),
+        )
+
+        # 5. seen-set insert: everything scheduled or robots-blocked this epoch
+        newly_seen = mat(
+            scheduled.select("uri", "host")
+            .unionByName(blocked.select("uri", "host"))
+            .distinct()
+        )
+        seen_next = seen_tbl.unionByName(newly_seen)
+        # O(delta) filter maintenance: only the shards this epoch's uris land
+        # on are recomputed (touched-slice semi-join inside filter_insert) and
+        # committed as a mode="merge" snapshot keyed on pid — the untouched
+        # ~n_partitions bitmap rows are never rewritten (the reference's
+        # touch-only-dirtied-buckets discipline, UriCombineQ.java:87-90).
+        # The Python insert kernel feeds BOTH the in-epoch probe (via
+        # bloom_next) and the commit: cut, it runs once.
+        bloom_delta = mat(cfg.filter_insert(newly_seen.select("uri"), bloom_tbl, delta_only=True))
+        bloom_next = bloom_tbl.join(
+            F.broadcast(bloom_delta.select("pid")), "pid", "left_anti"
+        ).unionByName(bloom_delta)
+
+        # 6. frontier update, O(delta): consumed rows (scheduled + robots-
+        #    blocked) become merge-commit DELETE keys; unseen new candidates
+        #    become UPSERT rows.  A child already on the frontier gets the
+        #    merged value (max priority, min discovery epoch) via ONE
+        #    key-partitioned join of the delta-sized fresh set against the
+        #    frontier — never a groupBy over the whole remaining ∪ fresh
+        #    union (at a 10^9-row frontier that groupBy is a full-state
+        #    shuffle + rewrite per tick).  This is literally the
+        #    ``MERGE INTO frontier`` statement in sources/iceberg_sql.py:
+        #    MATCHED AND consumed -> DELETE; MATCHED -> greatest(priority);
+        #    NOT MATCHED -> INSERT.
+        fresh = cfg.filter_unseen(children, seen_next, bloom_next)
+        fresh_agg = mat(fresh.groupBy("uri").agg(
+            F.first("url").alias("url"),
+            F.first("host").alias("host"),
+            F.first("path").alias("path"),
+            F.max("priority").alias("priority"),
+            F.first("is_image").alias("is_image"),
+        ))
+        # old values for colliding keys only: broadcast-semi slice of the
+        # frontier (scan, no state shuffle), then a delta×delta left join
+        old_slice = delta_ops.touched(frontier, fresh_agg, "uri").select(
             "uri",
-            F.lit(None).cast("string").alias("crawl_date"),
-            F.lit(None).cast("string").alias("server"),
-            "title",
-            normalize_links(
-                F.coalesce(
-                    "outbound_links",
-                    F.array().cast(PAGE_SCHEMA["outbound_links"].dataType),
-                )
-            ).alias("outbound_links"),
-            F.lit("put").alias("op"),
+            F.col("priority").alias("__old_prio"),
+            F.col("discovered_epoch").alias("__old_de"),
         )
-    )
-    index_outputs, feed = delta_ops.cascade(
-        read("index_pages"), read("uri_counts"), read("domain_counts"), deltas
-    )
+        frontier_upserts = (
+            fresh_agg.join(old_slice, "uri", "left")
+            .select(
+                "uri", "url", "host", "path",
+                F.greatest(
+                    F.col("priority"), F.coalesce("__old_prio", F.lit(float("-inf")))
+                ).alias("priority"),
+                F.least(
+                    F.lit(epoch + 1).cast("long"),
+                    F.coalesce("__old_de", F.lit((1 << 62))),
+                ).cast("long").alias("discovered_epoch"),
+                "is_image",
+            )
+            .select(*[f.name for f in FRONTIER_SCHEMA.fields])
+        )
+        frontier_tombstones = newly_seen.select("uri")
 
-    # metrics: ONE job over delta-sized inputs, exact reference meter
-    # semantics (see epoch_meters' docstring) — never a scan of the full
-    # uri_counts state for telemetry.
-    metrics = epoch_meters(*feed)
-    part_metrics = _partition_metrics(
-        fetch_log.select("uri"), cfg.metric_partitions
-    )
+        # 7. index maintenance: fetched pages become 'put' deltas for the
+        #    delta cascade (operators/delta.py, T1-T5) — the one chain the
+        #    stream micro-batch and the IndexIT tests run too.  index_rows is
+        #    never read: its merge commit comes from delta-sized inputs only.
+        ex = fetched_pages.select(
+            F.col("uri").alias("page_uri"), F.explode("out_urls").alias("url")
+        )
+        link_structs = canonicalize(ex, "url").select(
+            "page_uri",
+            F.struct(
+                F.col("url"), F.col("uri"), F.lit("").alias("anchor_text")
+            ).alias("l"),
+        )
+        links_by_page = link_structs.groupBy("page_uri").agg(
+            F.collect_list("l").alias("outbound_links")
+        )
+        deltas = (
+            fetched_pages.select("uri", "url", "title")
+            .join(links_by_page, fetched_pages.uri == links_by_page.page_uri, "left")
+            .select(
+                "url",
+                "uri",
+                F.lit(None).cast("string").alias("crawl_date"),
+                F.lit(None).cast("string").alias("server"),
+                "title",
+                normalize_links(
+                    F.coalesce(
+                        "outbound_links",
+                        F.array().cast(PAGE_SCHEMA["outbound_links"].dataType),
+                    )
+                ).alias("outbound_links"),
+                F.lit("put").alias("op"),
+            )
+        )
+        index_outputs, feed = delta_ops.cascade(
+            read("index_pages"), read("uri_counts"), read("domain_counts"), deltas, mat
+        )
 
-    # ------------------------------------------------------------- commits
-    # One overlapped commit of all ten tables (Catalog.commit_epoch); the
-    # epoch is done once every table carries it, so no commit order matters.
-    # Every per-epoch commit is O(delta) write volume:
-    #   * monotone tables (seen / fetch_log / pages_state / fetched_images)
-    #     append ONLY this epoch's rows (Iceberg: fast-append);
-    #   * MUTATING tables (uri_counts / domain_counts / index_pages /
-    #     index_rows / frontier) commit mode="merge" — upsert rows +
-    #     delete keys, reconciled on read (Iceberg: MERGE INTO with
-    #     merge-on-read equality deletes; the exact statements in
-    #     sources/iceberg_sql.py).  Rewriting any of them in full each
-    #     epoch is O(total-state) — quadratic over a crawl, the last
-    #     10^10-scale killer the round-3 seam still had;
-    #   * the bloom/cuckoo filter ALSO commits mode="merge" keyed on
-    #     pid: one epoch's uris touch a bounded set of (host, salt)
-    #     shards, so only those bitmap rows are recomputed and written
-    #     (delta_only insert above) — at the 10^10 sizing (14.4 GiB over
-    #     1024 shards, docs/SCALE.md) a full rewrite per tick is 14.4 GiB
-    #     of write volume for a few-MiB dirty set.
-    outputs = {
-        "pages_state": (
-            fetched_pages.select(
-                "uri", "url", "host", "title", "out_urls",
-                F.lit(epoch).cast("long").alias("fetched_epoch"),
+        # metrics: ONE job over delta-sized inputs, exact reference meter
+        # semantics (see epoch_meters' docstring) — never a scan of the full
+        # uri_counts state for telemetry.
+        metrics = epoch_meters(*feed)
+        part_metrics = _partition_metrics(
+            fetch_log.select("uri"), cfg.metric_partitions
+        )
+
+        # ------------------------------------------------------------- commits
+        # One overlapped commit of all ten tables (Catalog.commit_epoch); the
+        # epoch is done once every table carries it, so no commit order matters.
+        # It drains every commit before it returns or raises, so the scope's
+        # exit releases the epoch's cut frames only once no job reads them.
+        # Every per-epoch commit is O(delta) write volume:
+        #   * monotone tables (seen / fetch_log / pages_state / fetched_images)
+        #     append ONLY this epoch's rows (Iceberg: fast-append);
+        #   * MUTATING tables (uri_counts / domain_counts / index_pages /
+        #     index_rows / frontier) commit mode="merge" — upsert rows +
+        #     delete keys, reconciled on read (Iceberg: MERGE INTO with
+        #     merge-on-read equality deletes; the exact statements in
+        #     sources/iceberg_sql.py).  Rewriting any of them in full each
+        #     epoch is O(total-state) — quadratic over a crawl, the last
+        #     10^10-scale killer the round-3 seam still had;
+        #   * the bloom/cuckoo filter ALSO commits mode="merge" keyed on
+        #     pid: one epoch's uris touch a bounded set of (host, salt)
+        #     shards, so only those bitmap rows are recomputed and written
+        #     (delta_only insert above) — at the 10^10 sizing (14.4 GiB over
+        #     1024 shards, docs/SCALE.md) a full rewrite per tick is 14.4 GiB
+        #     of write volume for a few-MiB dirty set.
+        outputs = {
+            "pages_state": (
+                fetched_pages.select(
+                    "uri", "url", "host", "title", "out_urls",
+                    F.lit(epoch).cast("long").alias("fetched_epoch"),
+                ),
+                "append", None, None,
             ),
-            "append", None, None,
-        ),
-        "fetched_images": (fetched_images, "append", None, None),
-        "fetch_log": (fetch_log, "append", None, None),
-        "seen": (newly_seen, "append", None, None),
-        "bloom": (bloom_delta, "merge", ["pid"], None),
-        **{
-            t: (upserts, "merge", keys, dels)
-            for t, (upserts, keys, dels) in index_outputs.items()
-        },
-        "frontier": (frontier_upserts, "merge", ["uri"], frontier_tombstones),
-    }
-    try:
+            "fetched_images": (fetched_images, "append", None, None),
+            "fetch_log": (fetch_log, "append", None, None),
+            "seen": (newly_seen, "append", None, None),
+            "bloom": (bloom_delta, "merge", ["pid"], None),
+            **{
+                t: (upserts, "merge", keys, dels)
+                for t, (upserts, keys, dels) in index_outputs.items()
+            },
+            "frontier": (frontier_upserts, "merge", ["uri"], frontier_tombstones),
+        }
         cat.commit_epoch(
             spark, epoch, outputs,
             compact=bool(cfg.compact_every) and epoch % cfg.compact_every == 0,
             lineage={t: epoch - 1 for t in TABLES}, metrics=metrics,
             partition_metrics=part_metrics,
         )
-    finally:
-        for c in (gated, scheduled, fetched_pages, newly_seen):
-            c.unpersist()
     return metrics
 
 

@@ -43,7 +43,7 @@ def hits(
     dst: str = "dst",
     iterations: int = 4,
     scale: int = 10**9,
-    materialize: str | Materializer | None = None,
+    materialize: Materializer | None = None,
 ) -> DataFrame:
     """Fixed-point HITS over a directed edge list.
 
@@ -52,11 +52,11 @@ def hits(
     roles a node never plays).  Multi-edges count once per occurrence —
     pass a distinct list for simple-graph semantics.
 
-    ``materialize`` selects the lineage-truncation backend
-    (operators/materialize.py): executor-local for single-app runs,
-    ``"parquet:<dir>"`` for the durable preemptible-cluster seam.
+    ``materialize`` is the lineage-truncation backend
+    (operators/materialize.py): ``None`` (executor-local) for single-app
+    runs, ``Materializer(<dir>)`` for the durable preemptible-cluster seam.
     """
-    mat = Materializer.of(materialize)
+    mat = materialize or Materializer()
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # pinned static edge list (persist keeps the repartition's layout —
     # a checkpoint would report UnknownPartitioning and re-shuffle the

@@ -33,7 +33,7 @@ def kcore_peel(
     rounds: int | None = 6,
     src: str = "src",
     dst: str = "dst",
-    materialize: str | Materializer | None = None,
+    materialize: Materializer | None = None,
     broadcast_nodes: bool = True,
 ) -> DataFrame:
     """Peel nodes of degree < ``k`` for ``rounds`` rounds over the
@@ -47,14 +47,14 @@ def kcore_peel(
     the loop's only driver data is the per-round edge-count scalar, and
     every round strictly shrinks the edge set, so termination is
     guaranteed in ≤ |E| rounds and in practice a handful).
-    ``materialize`` selects the lineage backend (materialize.py).
+    ``materialize``: ``None`` or a lineage ``Materializer`` (materialize.py).
 
     ``broadcast_nodes=True`` ships the per-round survivor set (one id
     per surviving node) as a broadcast, so the edge table keeps its
     partitioning across every round and only the degree aggregate
     shuffles; pass ``False`` on graphs whose node set cannot be
     broadcast (10^9+ nodes) to fall back to shuffle joins."""
-    mat = Materializer.of(materialize)
+    mat = materialize or Materializer()
     e0 = mat.pin(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -118,7 +118,7 @@ def hop_distances(
     src: str = "src",
     dst: str = "dst",
     directed: bool = True,
-    materialize: str | Materializer | None = None,
+    materialize: Materializer | None = None,
 ) -> DataFrame:
     """Multi-source BFS: ``(id, dist)`` — the minimum number of link
     hops from any seed, for every node within ``rounds`` hops (nodes
@@ -130,8 +130,8 @@ def hop_distances(
     out-edges, not the whole distance table.  ``rounds=None`` runs
     until the frontier empties (full reachability — termination is
     guaranteed because every round adds only never-seen nodes).
-    ``materialize`` selects the lineage backend (materialize.py)."""
-    mat = Materializer.of(materialize)
+    ``materialize``: ``None`` or a lineage ``Materializer`` (materialize.py)."""
+    mat = materialize or Materializer()
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not directed:
         e = e.union(

@@ -1,29 +1,37 @@
-"""Lineage-truncation seam shared by every bounded-round iterative
-operator (pagerank, hits, kcore, bfs, connected components).
+"""The one owner of reused and lineage-cut frames: the iterative operators
+(pagerank, hits, kcore, bfs, components) cut their rounds through it, the
+crawl epoch and the stream micro-batch every frame they reuse.
 
 Iterative DataFrame jobs must cut their logical-plan lineage every
 round or the plan grows exponentially (each round's plan embeds the
 previous round's).  HOW to cut is a deployment decision, not an
 algorithm decision, and there are exactly two:
 
-* executor-local (default) — lazy ``localCheckpoint``: the cut folds
-  into the first job that consumes the round, so no dedicated barrier
-  job runs.  NOT durable: an executor loss kills the job (Spark cannot
-  recompute a truncated lineage).
-* ``parquet:<dir>`` — write/read round-trip under a caller-supplied
-  directory: the durable seam for preemptible / multi-tenant clusters,
-  mirroring the reference's resume contract (IndexIT.java:107-135 —
-  a killed run must resume from its last committed snapshot, never
-  refetch).  Equivalent to ``sparkContext.setCheckpointDir`` +
-  ``checkpoint()`` but with an inspectable, versioned layout.
+* executor-local (``Materializer()``) — lazy ``localCheckpoint``: the
+  cut folds into the first job that consumes the frame, so no dedicated
+  barrier job runs.  NOT durable: an executor loss kills the job (Spark
+  cannot recompute a truncated lineage).
+* ``Materializer(<dir>)`` — write/read round-trip under a caller-
+  supplied directory: the durable seam for preemptible / multi-tenant
+  clusters, mirroring the reference's resume contract
+  (IndexIT.java:107-135 — a killed run must resume from its last
+  committed snapshot, never refetch).  Equivalent to
+  ``sparkContext.setCheckpointDir`` + ``checkpoint()`` but with an
+  inspectable, versioned layout.
 
 The round-6 sweep (BENCH/mat_sweep_r06.json) measured the lazy local
 cut fastest and best-scaling N→4N against an eager cut and an
 every-2 persist-between-cuts cadence; neither is offered.
 
-Usage inside a loop operator::
+``release()`` drops every cut and pin: a local cut's RDD blocks, a pin's
+cache entry, a parquet cut's snapshot directory.  A unit of work that
+ends at its own action (a crawl epoch, a stream micro-batch) opens one
+``with Materializer() as mat:`` scope, released on exit, success or
+failure.  An operator that returns a lazy frame cannot release before
+the caller's action; it cuts through the caller's ``materialize=``
+instance or its own unowned one::
 
-    mat = Materializer.of(materialize)      # param: None | "parquet:<dir>"
+    mat = materialize or Materializer()
     static = mat.pin(static)                # once, before the loop
     for _ in range(rounds):
         df = mat(step(df))                  # one cut per round
@@ -32,44 +40,41 @@ Usage inside a loop operator::
 
 from __future__ import annotations
 
+import shutil
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 
 class Materializer:
-    """Lineage cutter: lazy ``localCheckpoint`` by default, a durable
-    parquet round-trip under ``path`` when one is given."""
+    """Lineage cutter and owner of what it cuts: lazy ``localCheckpoint``
+    by default, a durable parquet round-trip under ``path`` when one is
+    given.  A context manager whose exit runs ``release()``."""
 
     def __init__(self, path: str | None = None):
         self.path = path.rstrip("/") if path else None
         self._snaps = 0
+        self._releases = []
 
-    @classmethod
-    def of(cls, spec) -> "Materializer":
-        """Coerce an operator's ``materialize=`` argument: an existing
-        instance passes through, ``None`` is the executor-local cut and
-        ``"parquet:<dir>"`` the durable one."""
-        if isinstance(spec, cls):
-            return spec
-        if spec is None:
-            return cls()
-        if isinstance(spec, str) and spec.startswith("parquet:"):
-            path = spec.split(":", 1)[1]
-            if path:
-                return cls(path)
-        raise ValueError(
-            f'materialize must be None, "parquet:<dir>" or a Materializer, got {spec!r}'
-        )
+    def __enter__(self) -> "Materializer":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
     def __call__(self, df: DataFrame) -> DataFrame:
         """Cut ``df``'s lineage."""
         if self.path is None:
-            return df.localCheckpoint(eager=False)
+            cut = df.localCheckpoint(eager=False)
+            # the cut's plan is one LogicalRDD; its blocks live under that RDD
+            self._releases.append(partial(cut._jdf.logicalPlan().rdd().unpersist, False))
+            return cut
         self._snaps += 1
         snap = f"{self.path}/snap_{self._snaps:04d}_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(snap)
+        self._releases.append(partial(shutil.rmtree, snap, True))
         # the frame's own schema plans the re-read: no footer-inference job
         return df.sparkSession.read.schema(df.schema).parquet(snap)
 
@@ -89,11 +94,19 @@ class Materializer:
         keeps its durable round-trip (scan partitioning is lost there;
         durability is that mode's contract).
 
-        Pinned frames are never released here: they feed the caller's
-        lazily-consumed result, and unpersisting them before the
-        caller's first action would force a full recompute per consumer.
-        The context cleaner reclaims them once the result is
-        garbage-collected."""
+        A pin lives until ``release()``.  An operator that returns a
+        lazy frame built on it through an unowned ``Materializer`` never
+        releases it: unpersisting before the caller's first action would
+        force a full recompute per consumer.  The context cleaner then
+        reclaims it once the result is garbage-collected."""
         if self.path is not None:
             return self(df)
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
+        pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._releases.append(pinned.unpersist)
+        return pinned
+
+    def release(self) -> None:
+        """Drop every frame cut or pinned so far; a frame built on one
+        must not be used afterwards."""
+        while self._releases:
+            self._releases.pop()()

@@ -51,7 +51,7 @@ def pagerank(
     iterations: int = 5,
     damping: int = 85,
     scale: int = 10**12,
-    materialize: str | Materializer | None = None,
+    materialize: Materializer | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over a directed edge list.
 
@@ -66,12 +66,12 @@ def pagerank(
     ~``scale`` — no ANSI overflow at any graph size whose total mass
     is one.
 
-    ``materialize`` selects the lineage-truncation backend (see
+    ``materialize`` is the lineage-truncation backend (see
     operators/materialize.py): ``None`` (lazy executor-local) for
-    single-app runs, ``"parquet:<dir>"`` for the durable seam a
-    preemptible cluster needs, or a :class:`Materializer` instance.
+    single-app runs, ``Materializer(<dir>)`` for the durable seam a
+    preemptible cluster needs.
     """
-    mat = Materializer.of(materialize)
+    mat = materialize or Materializer()
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     outdeg = e.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("outdeg")

@@ -1235,17 +1235,14 @@ def _stream_conf(spark: SparkSession):
     state is a few thousand keys pays O(partitions × stores × batches)
     of pure scheduler/commit fixed cost.  The partition count is pinned
     at the query's FIRST start via spark.sql.shuffle.partitions, so it
-    is a planning decision, not a data-size one.  Parameterized for
-    clusters via SPARK_GRAFT_STREAM_PARTITIONS (default 4: an
+    is a planning decision, not a data-size one.  Fixed at 4: an
     8/6/4-level ABAB sweep over all five gates measured 4 fastest —
     means 34.9/32.0/29.3 s, the replay state is a few thousand keys so
-    commit count dominates): raise it when per-key streaming state is
-    actually large enough to need the spread.  Exact results are
-    partitioning-independent (integer sums, per-key session merges,
-    per-key dedup)."""
-    n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
+    commit count dominates (BENCH/stream_partitions_sweep_r07.json).
+    Exact results are partitioning-independent (integer sums, per-key
+    session merges, per-key dedup)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         yield
     finally:

@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from webindex_spark.operators import delta as delta_ops
+from webindex_spark.operators.materialize import Materializer
 from webindex_spark.sources.pages_json import GSON_PAGE_SCHEMA, gson_pages_transform
 from webindex_spark.sources.snapshots import Catalog
 
@@ -61,23 +62,26 @@ def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
     def read(t: str) -> DataFrame:
         return cat.table(t).read_before_epoch(spark, batch_id)
 
-    outputs, _ = delta_ops.cascade(
-        read("index_pages"), read("uri_counts"), read("domain_counts"),
-        pages.withColumn("op", F.lit("put")),
-    )
-    # The four commits are independent of EACH OTHER (each reads its own
-    # slice of the cascade's shared lazily-checkpointed delta frames), so
-    # overlapping them hides the three cheap commits under index_rows'
-    # deeper insert chain, and the shared lazy checkpoints are
-    # materialized once by whichever consumer job gets there first
-    # (BlockManager block-level locking makes the race compute-once).
-    # Submitted in STREAM_TABLES order, which measured faster than the
-    # cascade's: the FIFO scheduler serves earlier-submitted jobs first.
-    cat.commit_epoch(
-        spark, batch_id,
-        {t: (outputs[t][0], "merge", *outputs[t][1:]) for t in STREAM_TABLES},
-        lineage={"stream_batch": batch_id},
-    )
+    with Materializer() as mat:
+        outputs, _ = delta_ops.cascade(
+            read("index_pages"), read("uri_counts"), read("domain_counts"),
+            pages.withColumn("op", F.lit("put")), mat,
+        )
+        # The four commits are independent of EACH OTHER (each reads its own
+        # slice of the cascade's shared lazily-checkpointed delta frames), so
+        # overlapping them hides the three cheap commits under index_rows'
+        # deeper insert chain, and the shared lazy checkpoints are
+        # materialized once by whichever consumer job gets there first
+        # (BlockManager block-level locking makes the race compute-once).
+        # Submitted in STREAM_TABLES order, which measured faster than the
+        # cascade's: the FIFO scheduler serves earlier-submitted jobs first.
+        # All four have drained when commit_epoch returns or raises, so the
+        # scope's exit releases the cut frames after their last reader.
+        cat.commit_epoch(
+            spark, batch_id,
+            {t: (outputs[t][0], "merge", *outputs[t][1:]) for t in STREAM_TABLES},
+            lineage={"stream_batch": batch_id},
+        )
 
 
 def start_page_stream(spark: SparkSession, input_dir: str, cat: Catalog,
