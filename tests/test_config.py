@@ -9,6 +9,7 @@ import os
 import pytest
 
 from webindex_spark.config import WebIndexConfig
+from webindex_spark.operators import cuckoo
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -67,7 +68,8 @@ def test_from_env_and_crawl_config(tmp_path, monkeypatch):
     cc = cfg.to_crawl_config()
     assert cc.budget == 7 and cc.filter_kind == "cuckoo"
     assert cc.compact_every == 3
-    assert cc.bloom[0] == 4 and cc.bloom[2] == 4  # cuckoo (n_parts, m, SLOTS)
+    assert type(cc.bloom) is cuckoo.CuckooParams
+    assert cc.bloom == cuckoo.cuckoo_params(4096, 4)
     monkeypatch.delenv("WEBINDEX_SPARK_CONFIG")
     monkeypatch.delenv("WI_HOME", raising=False)
     assert WebIndexConfig.from_env() is None

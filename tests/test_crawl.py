@@ -245,11 +245,14 @@ def test_resume_after_init_kill(
 def test_epochs_and_batches_leave_no_cached_frames(
     spark, world, tmp_path_factory, monkeypatch, fail_commits
 ):
-    """A stream micro-batch, a crawl epoch and a crawl epoch whose commit
-    fails each leave Spark's CacheManager empty and hold no persistent RDD
-    (a cut's or a pin's) that was not held before."""
+    """A stream micro-batch, a crawl epoch (also in the cogroup probe
+    regime, for either filter kind) and a crawl epoch whose commit fails
+    each leave Spark's CacheManager empty and hold no persistent RDD (a
+    cut's or a pin's) that was not held before."""
+    import dataclasses
     import os
 
+    from webindex_spark.operators import seen as seen_ops
     from webindex_spark.sources.pages_json import read_pages_json
     from webindex_spark.streaming import page_stream
 
@@ -273,6 +276,17 @@ def test_epochs_and_batches_leave_no_cached_frames(
     frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
     assert cache_empty()
     assert persistent() <= held
+
+    with monkeypatch.context() as mp:
+        mp.setattr(seen_ops, "BROADCAST_BLOOM_MAX_BYTES", 0)
+        for kind in ("bloom", "cuckoo"):
+            frontier_ops.run_crawl(
+                spark, Catalog(str(tmp_path_factory.mktemp(f"cogroup_{kind}"))),
+                corpus, images, robots, seeds, 1,
+                dataclasses.replace(cfg, filter_kind=kind),
+            )
+            assert cache_empty()
+            assert persistent() <= held, kind
 
     fail_commits({"frontier"}, epoch=2)
     with pytest.raises(RuntimeError, match="simulated crash"):
@@ -379,6 +393,6 @@ def test_bloom_odelta_merge_commits(spark, crawled):
     got = {r["pid"]: tuple(r["words"]) for r in t.read(spark).collect()}
     cfg = crawl_cfg()
     seen_df = cat.table("seen").read(spark).select("uri")
-    full = cfg.filter_insert(seen_df, cfg.empty_filter(spark))
+    full = cfg.bloom.insert(seen_df, cfg.bloom.empty(spark))
     exp = {r["pid"]: tuple(r["words"]) for r in full.collect()}
     assert got == exp

@@ -1,11 +1,13 @@
 """Partitioned cuckoo-filter seen tier: no false negatives, bounded false
 positives, EXACT deletion (the capability Bloom lacks), JVM-probe ==
-numpy-probe parity, and the two-tier filter_unseen contract."""
+numpy-probe parity, the one probe-regime cap shared with Bloom, and the
+two-tier filter_unseen contract."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from webindex_spark.operators import cuckoo
+from webindex_spark.operators import seen as seen_ops
 
 
 def _uris(spark, lo, hi, tag="u"):
@@ -38,10 +40,25 @@ def test_jvm_probe_equals_numpy_probe(spark, built, monkeypatch):
     cand = _uris(spark, 9_000, 12_000)
     jvm = {r["uri"]: r["maybe_seen"]
            for r in cuckoo.cuckoo_probe(cand, table, "uri", m, n_parts).collect()}
-    monkeypatch.setattr(cuckoo, "BROADCAST_BLOOM_MAX_BYTES", 0)
+    monkeypatch.setattr(seen_ops, "BROADCAST_BLOOM_MAX_BYTES", 0)
     npy = {r["uri"]: r["maybe_seen"]
            for r in cuckoo.cuckoo_probe(cand, table, "uri", m, n_parts).collect()}
     assert jvm == npy
+
+
+def test_probe_regime_follows_the_one_cap(spark, built, monkeypatch):
+    """seen.BROADCAST_BLOOM_MAX_BYTES is the regime cap for the cuckoo
+    tier too: setting it to 0 (how the benches and gates force the 10^10
+    regime) makes a cuckoo probe plan the cogroup numpy kernel."""
+    table, m, n_parts = built
+
+    def plan():
+        probed = cuckoo.cuckoo_probe(_uris(spark, 0, 100), table, "uri", m, n_parts)
+        return probed._jdf.queryExecution().executedPlan().toString()
+
+    assert "FlatMapCoGroupsInPandas" not in plan()
+    monkeypatch.setattr(seen_ops, "BROADCAST_BLOOM_MAX_BYTES", 0)
+    assert "FlatMapCoGroupsInPandas" in plan()
 
 
 def test_delete_is_exact(spark, built):
@@ -66,8 +83,8 @@ def test_delete_safe_under_fingerprint_collision(spark):
     fingerprint copy (Fan et al. duplicates), so deleting one never
     un-marks the other — no false negative for an inserted item."""
     n_parts, m = 2, 8
-    hashed = cuckoo._with_hashes(
-        _uris(spark, 0, 6_000, tag="c"), "uri", m, n_parts
+    hashed = cuckoo.CuckooParams(n_parts, m).with_hashes(
+        _uris(spark, 0, 6_000, tag="c"), "uri"
     ).collect()
     by_key, pair = {}, None
     for r in hashed:
@@ -97,8 +114,8 @@ def test_filter_unseen_two_tier_exactness(spark, built):
     table, m, n_parts = built
     seen = _uris(spark, 0, 10_000)
     cand = _uris(spark, 9_500, 11_000)
-    got = {r["uri"] for r in cuckoo.filter_unseen(
-        cand, seen, table, "uri", m=m, n_partitions=n_parts).collect()}
+    got = {r["uri"] for r in seen_ops.filter_unseen(
+        cand, seen, table, "uri", params=cuckoo.CuckooParams(n_parts, m)).collect()}
     want = {r["uri"] for r in cand.join(seen, "uri", "left_anti").collect()}
     assert got == want  # final membership EXACT regardless of filter fps
 
@@ -116,9 +133,13 @@ def test_insert_deterministic_table(spark):
     assert ta == tb  # kernel sorts by uri -> layout-independent bytes
 
 
-def test_crawl_with_cuckoo_filter_matches_bloom(spark, tmp_path):
+@pytest.mark.parametrize("regime", ["broadcast", "cogroup"])
+def test_crawl_with_cuckoo_filter_matches_bloom(spark, tmp_path, monkeypatch, regime):
     """The production loop runs identically under either cheap-negative
-    tier (final membership is exact in both; only the filter differs)."""
+    tier, in either probe regime (final membership is exact in both;
+    only the filter differs)."""
+    if regime == "cogroup":
+        monkeypatch.setattr(seen_ops, "BROADCAST_BLOOM_MAX_BYTES", 0)
     from webindex_spark.operators import frontier as fr
     from webindex_spark.operators import synth
     from webindex_spark.sources.snapshots import Catalog

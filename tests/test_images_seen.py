@@ -84,7 +84,7 @@ def test_bloom_no_false_negatives_and_exactness(spark):
 
     # two-tier filter is EXACT (bloom fps removed by the anti-join)
     unseen = seen_ops.filter_unseen(
-        cand, seen_df, bloom, "uri", k=k, bits=bits, n_partitions=n_parts
+        cand, seen_df, bloom, "uri", params=seen_ops.BloomParams(n_parts, bits, k)
     )
     assert {r["uri"] for r in unseen.collect()} == set(probes[500:])
 
@@ -92,7 +92,8 @@ def test_bloom_no_false_negatives_and_exactness(spark):
 def test_probe_modes_agree(spark):
     """The JVM/broadcast probe and the numpy/cogroup probe implement the
     same index math — bit-for-bit identical verdicts."""
-    n_parts, bits, k = seen_ops.bloom_params(500, 0.01, 4)
+    params = seen_ops.bloom_params(500, 0.01, 4)
+    n_parts, bits, k = params
     inserted = spark.createDataFrame([(f"u{i}",) for i in range(300)], ["uri"])
     probes = spark.createDataFrame([(f"u{i}",) for i in range(600)], ["uri"])
     bloom = seen_ops.bloom_insert(
@@ -100,11 +101,11 @@ def test_probe_modes_agree(spark):
     ).cache()
     a = {
         r["uri"]: r["maybe_seen"]
-        for r in seen_ops._bloom_probe_jvm(probes, bloom, "uri", k, bits, n_parts).collect()
+        for r in seen_ops._probe_jvm(probes, bloom, "uri", params).collect()
     }
     b = {
         r["uri"]: r["maybe_seen"]
-        for r in seen_ops._bloom_probe_cogroup(probes, bloom, "uri", k, bits, n_parts).collect()
+        for r in seen_ops._probe_cogroup(probes, bloom, "uri", params).collect()
     }
     assert a == b
     assert all(a[f"u{i}"] for i in range(300))
@@ -123,7 +124,7 @@ def test_filter_unseen_cogroup_path(spark, monkeypatch):
         seen_df, seen_ops.empty_bloom(spark, n_parts, bits), "uri", k, bits, n_parts
     )
     unseen = seen_ops.filter_unseen(
-        cand, seen_df, bloom, "uri", k=k, bits=bits, n_partitions=n_parts
+        cand, seen_df, bloom, "uri", params=seen_ops.BloomParams(n_parts, bits, k)
     )
     assert {r["uri"] for r in unseen.collect()} == set(probes[200:])
 

@@ -24,10 +24,8 @@ def _synth(spark, n=20_000, n_hosts=200):
 
 
 def _unfused(frontier, robots, pre_seen, bloom, budget, n_salts, bp):
-    n_parts, bits, k = bp
     unseen = seen_ops.filter_unseen(
-        frontier, pre_seen.select("uri"), bloom, "uri",
-        k=k, bits=bits, n_partitions=n_parts,
+        frontier, pre_seen.select("uri"), bloom, "uri", params=bp
     )
     gated = robots_ops.apply_robots(unseen, robots).where(F.col("allowed"))
     return politeness.schedule(gated, budget=budget, n_salts=n_salts)
@@ -145,7 +143,7 @@ def test_cogroup_mode_two_tier(spark, monkeypatch):
         # the unfused comparator probes the same shard layout
         unseen = seen_ops.filter_unseen(
             frontier, pre_seen.select("uri"), bloom, "uri",
-            k=k, bits=bits, n_partitions=n_parts, pid_expr=pid,
+            params=bp, pid_expr=pid,
         )
         gated = robots_ops.apply_robots(unseen, robots).where(F.col("allowed"))
         want = {
@@ -163,7 +161,8 @@ def test_cogroup_plan_single_candidate_exchange(spark, monkeypatch):
     counting the exchanges feeding the Arrow kernel."""
     monkeypatch.setattr(seen_ops, "BROADCAST_BLOOM_MAX_BYTES", 0)
     frontier, robots, pre_seen = _synth(spark, n=5_000, n_hosts=50)
-    n_parts, bits, k = seen_ops.bloom_params(5_000, 0.01, 4)
+    bp = seen_ops.bloom_params(5_000, 0.01, 4)
+    n_parts, bits, k = bp
     pid = seen_ops.host_salt_pid("host", "uri", 4, n_parts)
     bloom = seen_ops.bloom_insert(
         pre_seen, seen_ops.empty_bloom(spark, n_parts, bits),
@@ -172,8 +171,7 @@ def test_cogroup_plan_single_candidate_exchange(spark, monkeypatch):
     kernel_out = sp._probe_prerank_cogroup(
         robots_ops.apply_robots(frontier, robots).where("allowed")
         .select("uri", "host", "priority", "crawl_delay"),
-        bloom, 5, uri_col="uri", host_col="host", n_salts=4,
-        k=k, bits=bits, n_partitions=n_parts,
+        bloom, 5, uri_col="uri", host_col="host", n_salts=4, params=bp,
     )
     kplan = kernel_out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in kplan

@@ -19,13 +19,16 @@ row per partition, each long packing ``SLOTS=4`` 16-bit fingerprints
   member = fp present in bucket i1 or i2
 
 All hashing is ANSI-overflow-safe 31-bit arithmetic on ``xxhash64``
-values, identical in the numpy kernels and the Catalyst probe (the same
+values, identical in the numpy kernels and the Catalyst test (the same
 discipline as seen.py).  Inserts/deletes run as cogrouped Arrow batches
 (one numpy kernel per filter partition, rows sorted by uri so the table
-bytes are deterministic regardless of shuffle arrival order); membership
-probes run either as a pure-Catalyst broadcast join (filter <= the
-broadcast cap: element_at + shifts in whole-stage codegen, zero Python,
-zero shuffle) or as the cogroup kernel at the 10^10 sizing.
+bytes are deterministic regardless of shuffle arrival order).
+
+``CuckooParams`` is this kind's side of the seen-tier seam (seen.py owns
+the rest): byte size, hash columns, the Catalyst and numpy lane tests
+(element_at + shifts in whole-stage codegen; the same lanes in numpy),
+empty table and insert.  seen.filter_probe picks the probe regime and
+seen.filter_unseen runs the two tiers for this kind as for Bloom.
 
 False-positive rate ~= 2 * SLOTS / 2^16 (~1.2e-4 at 16-bit fingerprints);
 like the Bloom tier, the EXACT anti-join downstream makes false positives
@@ -39,7 +42,7 @@ inserts outnumber its deletes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -47,7 +50,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from webindex_spark.operators.seen import BROADCAST_BLOOM_MAX_BYTES
+from webindex_spark.operators import seen as seen_ops
 
 CUCKOO_SCHEMA = T.StructType(
     [
@@ -63,15 +66,88 @@ _H31 = 1 << 31
 MAX_KICKS = 500
 
 
-def cuckoo_params(expected_n: int, n_partitions: int = 64) -> tuple[int, int]:
-    """(n_partitions, m buckets/partition). Sized for <= ~84% load (the
-    practical cuckoo ceiling is ~95% at 4 slots); m is a power of two
-    (the XOR alternation requires it)."""
+class CuckooParams(NamedTuple):
+    """The cuckoo kind's parts: ``m`` buckets of SLOTS fingerprints per
+    shard."""
+
+    n_partitions: int
+    m: int
+
+    column = "buckets"
+    hash_cols = ("fp", "i1", "i2")
+
+    @property
+    def nbytes(self) -> int:
+        return self.n_partitions * self.m * 8
+
+    def with_hashes(
+        self, df: DataFrame, uri_col: str, pid_expr: F.Column | None = None
+    ) -> DataFrame:
+        """``pid_expr`` overrides the shard id (default: uri hash) — the
+        fused scheduling pipeline passes seen.host_salt_pid so the cuckoo
+        shards live on the SAME (host, salt) buckets as the seen table and
+        politeness windows (identical discipline to Bloom's)."""
+        m = self.m
+        c = F.col(uri_col)
+        fp = F.pmod(F.xxhash64(F.lit("cfp"), c), F.lit(_FP_MASK)) + 1  # 1..65535
+        g = F.pmod(fp * F.lit(_G_MULT), F.lit(_H31)).bitwiseAND(F.lit(m - 1))
+        i1 = F.pmod(F.xxhash64(F.lit("ci"), c), F.lit(m))
+        pid = (
+            pid_expr
+            if pid_expr is not None
+            else F.pmod(
+                F.xxhash64(F.lit("cpid"), c), F.lit(self.n_partitions)
+            ).cast("int")
+        )
+        return (
+            df.withColumn("pid", pid)
+            .withColumn("fp", fp)
+            .withColumn("i1", i1)
+            .withColumn("i2", i1.bitwiseXOR(g))
+        )
+
+    def jvm_test(self) -> F.Column:
+        """fp present in any lane of bucket i1 or i2, as Catalyst
+        expressions over ``buckets``."""
+        hit = F.lit(False)
+        for idx in ("i1", "i2"):
+            word = F.element_at(F.col("buckets"), F.col(idx).cast("int") + 1)
+            for s in range(SLOTS):
+                lane = F.shiftrightunsigned(word, 16 * s).bitwiseAND(F.lit(_FP_MASK))
+                hit = hit | (lane == F.col("fp"))
+        return hit
+
+    def np_test(self, buckets: np.ndarray, cdf: pd.DataFrame) -> np.ndarray:
+        """The same lane test in numpy over one shard's uint64 buckets."""
+        fp = cdf["fp"].to_numpy().astype(np.uint64)
+        hit = np.zeros(len(cdf), dtype=bool)
+        for idx in ("i1", "i2"):
+            w = buckets[cdf[idx].to_numpy()]
+            for s in range(SLOTS):
+                hit |= ((w >> np.uint64(16 * s)) & np.uint64(_FP_MASK)) == fp
+        return hit
+
+    def empty(self, spark: SparkSession) -> DataFrame:
+        return empty_cuckoo(spark, self.n_partitions, self.m)
+
+    def insert(
+        self, uris: DataFrame, table: DataFrame, uri_col: str = "uri",
+        pid_expr: F.Column | None = None, delta_only: bool = False,
+    ) -> DataFrame:
+        return cuckoo_insert(
+            uris, table, uri_col, self.m, self.n_partitions, pid_expr, delta_only
+        )
+
+
+def cuckoo_params(expected_n: int, n_partitions: int = 64) -> CuckooParams:
+    """CuckooParams(n_partitions, m buckets/partition). Sized for <= ~84%
+    load (the practical cuckoo ceiling is ~95% at 4 slots); m is a power
+    of two (the XOR alternation requires it)."""
     per_part = max(1, expected_n // n_partitions)
     m = 1
     while m * SLOTS * 0.84 < per_part:
         m *= 2
-    return n_partitions, max(m, 8)
+    return CuckooParams(n_partitions, max(m, 8))
 
 
 def empty_cuckoo(spark: SparkSession, n_partitions: int, m: int) -> DataFrame:
@@ -79,40 +155,6 @@ def empty_cuckoo(spark: SparkSession, n_partitions: int, m: int) -> DataFrame:
     return spark.createDataFrame(
         [(p, zero) for p in range(n_partitions)], schema=CUCKOO_SCHEMA
     )
-
-
-def _with_hashes(
-    df: DataFrame, uri_col: str, m: int, n_partitions: int,
-    pid_expr: F.Column | None = None,
-) -> DataFrame:
-    """``pid_expr`` overrides the shard id (default: uri hash) — the
-    fused scheduling pipeline passes seen.host_salt_pid so the cuckoo
-    shards live on the SAME (host, salt) buckets as the seen table and
-    politeness windows (identical discipline to seen._with_hashes)."""
-    c = F.col(uri_col)
-    fp = F.pmod(F.xxhash64(F.lit("cfp"), c), F.lit(_FP_MASK)) + 1  # 1..65535
-    g = F.pmod(fp * F.lit(_G_MULT), F.lit(_H31)).bitwiseAND(F.lit(m - 1))
-    i1 = F.pmod(F.xxhash64(F.lit("ci"), c), F.lit(m))
-    pid = (
-        pid_expr
-        if pid_expr is not None
-        else F.pmod(F.xxhash64(F.lit("cpid"), c), F.lit(n_partitions)).cast("int")
-    )
-    return (
-        df.withColumn("pid", pid)
-        .withColumn("fp", fp)
-        .withColumn("i1", i1)
-        .withColumn("i2", i1.bitwiseXOR(g))
-    )
-
-
-def _np_hashes(fp: np.ndarray, i1: np.ndarray, m: int):
-    g = ((fp.astype(np.int64) * _G_MULT) % _H31) & (m - 1)
-    return i1, i1 ^ g
-
-
-def _lanes(word: np.ndarray):
-    return [(word >> np.uint64(16 * s)) & np.uint64(_FP_MASK) for s in range(SLOTS)]
 
 
 def _kernel_upsert(buckets: np.ndarray, fps: np.ndarray, i1s: np.ndarray,
@@ -188,16 +230,14 @@ def _cogroup_apply(uris: DataFrame, table: DataFrame, uri_col: str, m: int,
                    n_partitions: int, delete: bool,
                    pid_expr: F.Column | None = None,
                    delta_only: bool = False) -> DataFrame:
-    cand = _with_hashes(uris, uri_col, m, n_partitions, pid_expr).select(
-        "pid", "fp", "i1", "i2", uri_col
-    )
+    cand = CuckooParams(n_partitions, m).with_hashes(
+        uris, uri_col, pid_expr
+    ).select("pid", "fp", "i1", "i2", uri_col)
     if delta_only:
         # O(delta) commit shape (see seen.bloom_insert): only shards the
-        # batch touches are read (broadcast semi — scan, no shuffle),
-        # updated, and returned, for a mode="merge" commit keyed on pid
-        table = table.join(
-            F.broadcast(cand.select("pid").distinct()), "pid", "left_semi"
-        )
+        # batch touches are read, updated, and returned, for a
+        # mode="merge" commit keyed on pid
+        table = seen_ops.touched_shards(table, cand)
 
     def upsert(key, cdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(key[0])
@@ -261,70 +301,8 @@ def cuckoo_delete(uris: DataFrame, table: DataFrame, uri_col: str, m: int,
 
 def cuckoo_probe(candidates: DataFrame, table: DataFrame, uri_col: str,
                  m: int, n_partitions: int) -> DataFrame:
-    """candidates + boolean ``maybe_seen``; physical mode by filter size
-    (broadcast/Catalyst vs cogroup/numpy), like seen.bloom_probe."""
-    if n_partitions * m * 8 <= BROADCAST_BLOOM_MAX_BYTES:
-        return _probe_jvm(candidates, table, uri_col, m, n_partitions)
-    return _probe_cogroup(candidates, table, uri_col, m, n_partitions)
-
-
-def _probe_jvm(candidates: DataFrame, table: DataFrame, uri_col: str,
-               m: int, n_partitions: int) -> DataFrame:
-    cand = _with_hashes(candidates, uri_col, m, n_partitions)
-    j = cand.join(F.broadcast(table), "pid", "left")
-    hit = F.lit(False)
-    for idx in ("i1", "i2"):
-        word = F.element_at(F.col("buckets"), F.col(idx).cast("int") + 1)
-        for s in range(SLOTS):
-            lane = F.shiftrightunsigned(word, 16 * s).bitwiseAND(F.lit(_FP_MASK))
-            hit = hit | (lane == F.col("fp"))
-    maybe = F.when(F.col("buckets").isNull(), F.lit(False)).otherwise(hit)
-    return j.withColumn("maybe_seen", maybe).drop("pid", "fp", "i1", "i2", "buckets")
-
-
-def _probe_cogroup(candidates: DataFrame, table: DataFrame, uri_col: str,
-                   m: int, n_partitions: int) -> DataFrame:
-    cand = _with_hashes(candidates, uri_col, m, n_partitions)
-    out_schema = T.StructType(
-        [f for f in cand.schema.fields if f.name not in ("fp", "i1", "i2")]
-        + [T.StructField("maybe_seen", T.BooleanType(), False)]
+    """candidates + boolean ``maybe_seen`` (seen.filter_probe of a cuckoo
+    table; the regime is seen's)."""
+    return seen_ops.filter_probe(
+        candidates, table, uri_col, CuckooParams(n_partitions, m)
     )
-    cols = [f.name for f in cand.schema.fields if f.name not in ("fp", "i1", "i2")]
-
-    def probe(key, cdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
-        if len(tdf) == 0:
-            res = np.zeros(len(cdf), dtype=bool)
-        else:
-            b = np.asarray(tdf["buckets"].iloc[0], dtype=np.int64).view(np.uint64)
-            fp = cdf["fp"].to_numpy().astype(np.uint64)
-            hit = np.zeros(len(cdf), dtype=bool)
-            for idx in ("i1", "i2"):
-                w = b[cdf[idx].to_numpy()]
-                for lane in _lanes(w):
-                    hit |= lane == fp
-            res = hit
-        out = cdf[cols].copy()
-        out["maybe_seen"] = res
-        return out
-
-    return (
-        cand.groupBy("pid")
-        .cogroup(table.groupBy("pid"))
-        .applyInPandas(probe, schema=out_schema)
-        .drop("pid")
-    )
-
-
-def filter_unseen(candidates: DataFrame, seen: DataFrame, table: DataFrame | None,
-                  uri_col: str = "uri", *, m: int, n_partitions: int) -> DataFrame:
-    """Two-tier unseen filter with the cuckoo tier as the cheap negative —
-    identical contract to seen.filter_unseen."""
-    if table is None:
-        return candidates.join(seen.select(uri_col), uri_col, "left_anti")
-    probed = cuckoo_probe(candidates, table, uri_col, m, n_partitions)
-    if n_partitions * m * 8 > BROADCAST_BLOOM_MAX_BYTES:
-        probed = probed.localCheckpoint(eager=True)
-    fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(seen.select(uri_col), uri_col, "left_anti")
-    return fresh.unionByName(confirmed_new)

@@ -50,6 +50,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from webindex_spark.functions.spark_udfs import parse_url
+from webindex_spark.operators import cuckoo as cuckoo_ops
 from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators import politeness, robots as robots_ops, seen as seen_ops
 from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
@@ -133,54 +134,17 @@ class CrawlConfig:
     # ratio carries.  Set 0 when a deployment compacts out-of-band
     # (Iceberg maintenance jobs).
     compact_every: int = 2
-    bloom: tuple = field(init=False)
+    # the seen tier's filter (the table is "bloom" for either kind): its
+    # params object supplies the kind's parts (empty, insert)
+    bloom: seen_ops.BloomParams | cuckoo_ops.CuckooParams = field(init=False)
 
     def __post_init__(self):
-        if self.filter_kind == "cuckoo":
-            from webindex_spark.operators import cuckoo as cuckoo_ops
-
-            n_parts, m = cuckoo_ops.cuckoo_params(
-                self.bloom_expected_n, self.bloom_partitions
-            )
-            # (n_partitions, m buckets, slots) — same tuple arity as bloom
-            self.bloom = (n_parts, m, cuckoo_ops.SLOTS)
-        else:
-            self.bloom = seen_ops.bloom_params(
+        self.bloom = (
+            cuckoo_ops.cuckoo_params(self.bloom_expected_n, self.bloom_partitions)
+            if self.filter_kind == "cuckoo"
+            else seen_ops.bloom_params(
                 self.bloom_expected_n, self.bloom_fpp, self.bloom_partitions
             )
-
-    # --- the cheap-negative filter tier, behind one interface -----------
-
-    def empty_filter(self, spark):
-        n_parts, size, _ = self.bloom
-        if self.filter_kind == "cuckoo":
-            from webindex_spark.operators import cuckoo as cuckoo_ops
-
-            return cuckoo_ops.empty_cuckoo(spark, n_parts, size)
-        return seen_ops.empty_bloom(spark, n_parts, size)
-
-    def filter_insert(self, uris, table, uri_col="uri", delta_only=False):
-        n_parts, size, k = self.bloom
-        if self.filter_kind == "cuckoo":
-            from webindex_spark.operators import cuckoo as cuckoo_ops
-
-            return cuckoo_ops.cuckoo_insert(
-                uris, table, uri_col, size, n_parts, delta_only=delta_only
-            )
-        return seen_ops.bloom_insert(
-            uris, table, uri_col, k, size, n_parts, delta_only=delta_only
-        )
-
-    def filter_unseen(self, candidates, seen, table, uri_col="uri"):
-        n_parts, size, k = self.bloom
-        if self.filter_kind == "cuckoo":
-            from webindex_spark.operators import cuckoo as cuckoo_ops
-
-            return cuckoo_ops.filter_unseen(
-                candidates, seen, table, uri_col, m=size, n_partitions=n_parts
-            )
-        return seen_ops.filter_unseen(
-            candidates, seen, table, uri_col, k=k, bits=size, n_partitions=n_parts
         )
 
 
@@ -318,7 +282,7 @@ def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlCo
     empty = lambda schema: spark.createDataFrame([], schema)  # noqa: E731
     tables = {
         "seen": empty(SEEN_SCHEMA),
-        "bloom": cfg.empty_filter(spark),
+        "bloom": cfg.bloom.empty(spark),
         "fetch_log": empty(FETCH_LOG_SCHEMA),
         **{name: empty(schema) for name, schema in delta_ops.STATE_SCHEMAS.items()},
         "frontier": frontier,
@@ -393,13 +357,13 @@ def run_epoch(
         )
         seen_next = seen_tbl.unionByName(newly_seen)
         # O(delta) filter maintenance: only the shards this epoch's uris land
-        # on are recomputed (touched-slice semi-join inside filter_insert) and
+        # on are recomputed (touched-slice semi-join inside the insert) and
         # committed as a mode="merge" snapshot keyed on pid — the untouched
         # ~n_partitions bitmap rows are never rewritten (the reference's
         # touch-only-dirtied-buckets discipline, UriCombineQ.java:87-90).
         # The Python insert kernel feeds BOTH the in-epoch probe (via
         # bloom_next) and the commit: cut, it runs once.
-        bloom_delta = mat(cfg.filter_insert(newly_seen.select("uri"), bloom_tbl, delta_only=True))
+        bloom_delta = mat(cfg.bloom.insert(newly_seen.select("uri"), bloom_tbl, delta_only=True))
         bloom_next = bloom_tbl.join(
             F.broadcast(bloom_delta.select("pid")), "pid", "left_anti"
         ).unionByName(bloom_delta)
@@ -415,7 +379,9 @@ def run_epoch(
         #    ``MERGE INTO frontier`` statement in sources/iceberg_sql.py:
         #    MATCHED AND consumed -> DELETE; MATCHED -> greatest(priority);
         #    NOT MATCHED -> INSERT.
-        fresh = cfg.filter_unseen(children, seen_next, bloom_next)
+        fresh = seen_ops.filter_unseen(
+            children, seen_next, bloom_next, params=cfg.bloom, mat=mat
+        )
         fresh_agg = mat(fresh.groupBy("uri").agg(
             F.first("url").alias("url"),
             F.first("host").alias("host"),

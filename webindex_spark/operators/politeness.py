@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from webindex_spark.operators.seen import salt_col
+
 
 def ranked_slots(
     salted: DataFrame,
@@ -80,9 +82,7 @@ def schedule(
 ) -> DataFrame:
     """Pick ≤ budget URLs per host, assign ``slot`` (0-based fetch order
     within host/epoch) and ``tick`` (= slot * crawl_delay)."""
-    salted = frontier.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.lit("sched"), F.col(uri_col)), F.lit(n_salts))
-    )
+    salted = frontier.withColumn("__salt", salt_col(uri_col, n_salts))
     return ranked_slots(
         salted, budget, host_col, uri_col, priority_col, delay_col, "__salt"
     )

@@ -37,16 +37,17 @@ Equivalence: anti-join on (uri, host, salt) == anti-join on uri because
 host/salt are functions of uri; the salted two-phase ranking is the same
 phase-1-never-discards argument as politeness.schedule (its docstring).
 
-Bloom tier: with a broadcastable filter the anti-join above is already
-exchange-free, so a pre-probe would add per-row hash work and prune
-nothing — the fused path therefore probes only in cogroup mode (filter
-too big to broadcast, the 10^10 sizing).  There the filter shards are
-keyed by the SAME (host, salt) buckets (seen.host_salt_pid), so the
-probe's shuffle IS the scheduling exchange: the cogroup kernel runs the
-bit probe and the phase-1 politeness pre-rank together, and everything
-after it — the maybe-slice anti-join against the at-rest-bucketed seen
-table and the final ranking windows — is survivor-sized.  One
-candidate-sized exchange in BOTH regimes.
+Filter tier (Bloom or cuckoo; the filter table's column names the kind
+and seen.py picks the regime): with a broadcastable filter the anti-join
+above is already exchange-free, so a pre-probe would add per-row hash
+work and prune nothing — the fused path therefore probes only in cogroup
+mode (filter too big to broadcast, the 10^10 sizing).  There the filter
+shards are keyed by the SAME (host, salt) buckets (seen.host_salt_pid),
+so the probe's shuffle IS the scheduling exchange: the cogroup kernel
+runs the kind's numpy test and the phase-1 politeness pre-rank together,
+and everything after it — the maybe-slice anti-join against the
+at-rest-bucketed seen table and the final ranking windows — is
+survivor-sized.  One candidate-sized exchange in BOTH regimes.
 """
 
 from __future__ import annotations
@@ -85,27 +86,23 @@ def partition_for_schedule(
 
 def _probe_prerank_cogroup(
     candidates: DataFrame,
-    bloom: DataFrame,
+    table: DataFrame,
     budget: int,
     *,
     uri_col: str,
     host_col: str,
     n_salts: int,
-    k: int,
-    bits: int,
-    n_partitions: int,
+    params,
     n_sub: int = 1,
-    filter_kind: str = "bloom",
 ) -> DataFrame:
     """Fused Arrow kernel for the too-big-to-broadcast filter regime:
-    per (host, salt)-derived shard, run the vectorized filter probe
-    (Bloom bit test, or cuckoo fingerprint-lane test when
-    ``filter_kind="cuckoo"`` — then ``bits`` is the buckets-per-shard
-    ``m`` and ``k`` is unused) AND the phase-1 politeness pre-rank of
-    the fresh rows in one pass.  Both filter tables must be built with
-    the SAME host_salt_pid (``*_insert(pid_expr=...)``); the scheduling
-    semantics downstream are filter-blind — the tier only decides which
-    rows take the exact anti-join.
+    per (host, salt)-derived shard, run the filter kind's numpy probe
+    (``params.np_test`` through seen.np_member — Bloom bits or cuckoo
+    fingerprint lanes, whichever kind ``params`` is) AND the phase-1
+    politeness pre-rank of the fresh rows in one pass.  The filter table
+    must be built with the SAME host_salt_pid (``insert(pid_expr=...)``);
+    the scheduling semantics downstream are filter-blind — the tier only
+    decides which rows take the exact anti-join.
 
     Output: candidate columns + ``__salt`` + ``maybe_seen``; fresh rows
     are already cut to ≤ budget per shard-local (host, salt) slice
@@ -118,47 +115,23 @@ def _probe_prerank_cogroup(
     Skew: ``n_sub`` (host_salt_pid docstring) caps a hot host's largest
     shard at p/(n_salts × n_sub)% of candidates at the cost of keeping
     ≤ budget × n_sub fresh rows per (host, salt); the downstream
-    ranking windows restore exactness.  The bloom MUST be built with
+    ranking windows restore exactness.  The filter MUST be built with
     the same (n_salts, n_sub, n_partitions) pid."""
-    pid = seen_ops.host_salt_pid(host_col, uri_col, n_salts, n_partitions, n_sub)
+    pid = seen_ops.host_salt_pid(
+        host_col, uri_col, n_salts, params.n_partitions, n_sub
+    )
     salted = candidates.withColumn(SALT_COL, salt_col(uri_col, n_salts))
-    if filter_kind == "cuckoo":
-        from webindex_spark.operators import cuckoo as cuckoo_ops
-
-        cand = cuckoo_ops._with_hashes(
-            salted, uri_col, bits, n_partitions, pid_expr=pid
-        )
-        hash_cols = ("fp", "i1", "i2", "pid")
-    else:
-        cand = seen_ops._with_hashes(salted, uri_col, n_partitions, pid_expr=pid)
-        hash_cols = ("h1", "h2", "pid")
-    cols = [f.name for f in cand.schema.fields if f.name not in hash_cols]
+    cand = params.with_hashes(salted, uri_col, pid_expr=pid)
+    fields = [
+        f for f in cand.schema.fields if f.name not in (*params.hash_cols, "pid")
+    ]
+    cols = [f.name for f in fields]
     out_schema = T.StructType(
-        [f for f in cand.schema.fields if f.name not in hash_cols]
-        + [T.StructField("maybe_seen", T.BooleanType(), False)]
+        fields + [T.StructField("maybe_seen", T.BooleanType(), False)]
     )
 
-    def kernel(key, cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(cdf)
-        if len(bdf) == 0:
-            maybe = np.zeros(n, dtype=bool)
-        elif filter_kind == "cuckoo":
-            from webindex_spark.operators.cuckoo import _FP_MASK, _lanes
-
-            b = np.asarray(bdf["buckets"].iloc[0], dtype=np.int64).view(np.uint64)
-            fp = cdf["fp"].to_numpy().astype(np.uint64)
-            maybe = np.zeros(n, dtype=bool)
-            for idx_col in ("i1", "i2"):
-                w = b[cdf[idx_col].to_numpy()]
-                for lane in _lanes(w):
-                    maybe |= lane == fp
-        else:
-            words = np.asarray(bdf["words"].iloc[0], dtype=np.int64).view(np.uint64)
-            idx = seen_ops._indices(
-                cdf["h1"].to_numpy(), cdf["h2"].to_numpy(), k, bits
-            )
-            hit = (words[idx >> 6] >> (idx & 63).astype(np.uint64)) & np.uint64(1)
-            maybe = hit.astype(bool).all(axis=1)
+    def kernel(key, cdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
+        maybe = seen_ops.np_member(params, cdf, tdf)
         # Fresh-row pre-cut as a pure-numpy THRESHOLD mask — no pandas
         # string sort, no concat, no row reordering (the original
         # sort_values over object-dtype uris dominated kernel CPU).
@@ -191,7 +164,7 @@ def _probe_prerank_cogroup(
 
     return (
         cand.groupBy("pid")
-        .cogroup(bloom.groupBy("pid"))
+        .cogroup(table.groupBy("pid"))
         .applyInPandas(kernel, schema=out_schema)
     )
 
@@ -213,7 +186,6 @@ def schedule_frontier(
     seen_prepartitioned: bool = False,
     keep_cols: list[str] | None = None,
     n_sub: int = 1,
-    filter_kind: str = "bloom",
 ) -> DataFrame:
     """candidates -> unseen -> robots-allowed -> per-host budget/slots.
 
@@ -221,6 +193,10 @@ def schedule_frontier(
     slot + tick), identical to
     ``politeness.schedule(apply_robots(filter_unseen(...)))`` but with
     the fused single-exchange physical plan (module docstring).
+
+    ``bloom`` is the filter table of either kind: ``bits`` is its bits
+    per Bloom shard (``words`` column, ``k`` hashes) or its buckets per
+    cuckoo shard (``buckets`` column; ``k`` unused).
 
     ``seen`` must carry (uri_col, host_col).  Pass
     ``seen_prepartitioned=True`` when it already has the
@@ -248,15 +224,15 @@ def schedule_frontier(
         uri_col, host_col, "priority", "crawl_delay", *keep
     )
 
-    filter_bytes = (
-        n_partitions * bits * 8        # m packed-fingerprint longs/shard
-        if filter_kind == "cuckoo"
-        else n_partitions * (bits // 8)
+    # the filter table's own column names its kind (seen.table_params);
+    # seen decides the regime
+    params = (
+        None if bloom is None
+        else seen_ops.table_params(bloom, n_partitions, bits, k)
     )
     cogroup_mode = (
-        bloom is not None
-        and seen is not None
-        and filter_bytes > seen_ops.BROADCAST_BLOOM_MAX_BYTES
+        params is not None and seen is not None
+        and seen_ops.cogroup_regime(params)
     )
 
     # the seen side of the exact anti-join, on the (host, salt) layout
@@ -280,7 +256,7 @@ def schedule_frontier(
         # shards are keyed by host_salt_pid — the SAME (host, salt)
         # buckets the seen table uses at rest and the politeness windows
         # partition by — so every (host, salt) group arrives whole at its
-        # shard and the cogroup kernel does BOTH the numpy bit probe and
+        # shard and the cogroup kernel does BOTH the numpy filter probe and
         # the phase-1 politeness pre-rank of the definitely-fresh rows
         # (≤ budget per (host, salt) survive).  Everything downstream is
         # survivor- or maybe-sized: the maybe slice (hit rate + fpp)
@@ -288,15 +264,14 @@ def schedule_frontier(
         # shuffles; seen does not), and the final windows rank the small
         # union.  Round-2's plan paid TWO candidate-sized exchanges here
         # (uri-hash probe pid + window re-key) and measured 0.706 N->4N
-        # scaling; the bloom table MUST be built with the same
-        # host_salt_pid (bloom_insert(pid_expr=...)).
+        # scaling; the filter table MUST be built with the same
+        # host_salt_pid (insert(pid_expr=...)).
         out = _probe_prerank_cogroup(
             allowed, bloom, budget, uri_col=uri_col, host_col=host_col,
-            n_salts=n_salts, k=k, bits=bits, n_partitions=n_partitions,
-            n_sub=n_sub, filter_kind=filter_kind,
+            n_salts=n_salts, params=params, n_sub=n_sub,
         )
         # ONE consumer, no checkpoint: every kernel output row flows into
-        # the same anti-join.  Bloom has no false negatives, so a
+        # the same anti-join.  The filter has no false negatives, so a
         # definitely-fresh row (maybe_seen = false) can never match the
         # seen table — the anti-join is an exact no-op for it — while the
         # maybe slice is filtered exactly.  The earlier fresh/maybe

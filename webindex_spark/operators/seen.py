@@ -1,19 +1,25 @@
-"""Partitioned-Bloom URL-seen set (SURVEY.md §7.2 M3; north-rule core).
+"""Partitioned URL-seen set (SURVEY.md §7.2 M3; north-rule core): the
+two-tier protocol, and the Bloom filter kind.
 
 Two tiers, exactly as the scale design demands:
 
-  * **Bloom tier (cheap negative)**: a DataFrame of ``(pid:int,
-    words:array<long>)`` bitmap partitions.  All membership hashing is
-    JVM-side (``xxhash64``).  Probing has two physical modes, auto-chosen
-    by filter size:
-      - **broadcast/JVM** (filter ≤ 512 MiB): the bitmap rows broadcast-
-        join to candidates on pid and the k bit-tests run as pure Catalyst
-        expressions (``element_at`` + ``getbit``) inside whole-stage
-        codegen — zero shuffle, zero Python;
+  * **Filter tier (cheap negative)**: a DataFrame of ``(pid:int,
+    <column>:array<long>)`` shard rows.  Its kind is one params object —
+    ``BloomParams`` here (column ``words``), ``cuckoo.CuckooParams`` in
+    operators/cuckoo.py (column ``buckets``) — that supplies the kind's
+    parts: byte size, JVM hash columns (``xxhash64``), Catalyst and numpy
+    membership tests, empty table and insert.  This module owns the rest
+    once, for either kind: the probe regime (``cogroup_regime``, the one
+    read of ``BROADCAST_BLOOM_MAX_BYTES``, at call time), both probes and
+    ``filter_unseen``.  Probing has two physical modes, by filter size:
+      - **broadcast/JVM** (filter ≤ 512 MiB): the shard rows broadcast-
+        join to candidates on pid and the kind's test runs as pure
+        Catalyst expressions (Bloom: ``element_at`` + ``getbit``) inside
+        whole-stage codegen — zero shuffle, zero Python;
       - **cogroup/numpy** (the 10^10-URL sizing, ~14 GiB at fpp 1%):
-        candidates shuffle once to their bitmap's partition and the bit
-        tests run vectorized in numpy over Arrow batches.
-  * **Exact tier**: candidates the Bloom flags as maybe-seen are confirmed
+        candidates shuffle once to their shard's partition and the kind's
+        test runs vectorized in numpy over Arrow batches.
+  * **Exact tier**: candidates the filter flags as maybe-seen are confirmed
     with a LEFT ANTI join against the seen table.  False positives only
     cost extra anti-join input, never correctness — final membership is
     EXACT, which the north rule's "matching URL-seen membership" requires.
@@ -32,13 +38,15 @@ for i in 0..k-1 (Kirsch-Mitzenmacher double hashing).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
+
+from webindex_spark.operators.materialize import Materializer
 
 BLOOM_SCHEMA = T.StructType(
     [
@@ -47,14 +55,83 @@ BLOOM_SCHEMA = T.StructType(
     ]
 )
 
-# filters at or below this total size take the broadcast/JVM probe path
+# filters (of either kind) at or below this total size take the
+# broadcast/JVM probe path; read only by cogroup_regime
 BROADCAST_BLOOM_MAX_BYTES = 512 * 1024 * 1024
 
 _H31 = 1 << 31
 
 
+class BloomParams(NamedTuple):
+    """The Bloom kind's parts: ``bits`` per shard, ``k`` index hashes."""
+
+    n_partitions: int
+    bits: int
+    k: int
+
+    column = "words"
+    hash_cols = ("h1", "h2")
+
+    @property
+    def nbytes(self) -> int:
+        return self.n_partitions * (self.bits // 8)
+
+    def with_hashes(
+        self, df: DataFrame, uri_col: str, pid_expr: F.Column | None = None
+    ) -> DataFrame:
+        """JVM-side hashing: partition id + the two reduced index hashes.
+
+        ``pid_expr`` overrides the shard id (default: uri hash).  Insert
+        and probe must use the SAME pid function for a given filter table;
+        the bit positions (h1/h2) are pid-independent, so the pid only
+        chooses which shard owns a uri's bits."""
+        c = F.col(uri_col)
+        pid = (
+            pid_expr
+            if pid_expr is not None
+            else F.pmod(
+                F.xxhash64(F.lit("pid"), c), F.lit(self.n_partitions)
+            ).cast("int")
+        )
+        return (
+            df.withColumn("pid", pid)
+            .withColumn("h1", F.pmod(F.xxhash64(F.lit("h1"), c), F.lit(_H31)))
+            .withColumn(
+                "h2", F.pmod(F.xxhash64(F.lit("h2"), c), F.lit(_H31)).bitwiseOR(F.lit(1))
+            )
+        )
+
+    def jvm_test(self) -> F.Column:
+        """The k getbit tests as Catalyst expressions over ``words``."""
+        test = F.lit(True)
+        for i in range(self.k):
+            idx = F.pmod(F.col("h1") + F.lit(i) * F.col("h2"), F.lit(self.bits))
+            word = F.element_at(F.col("words"), F.shiftright(idx, 6).cast("int") + 1)
+            bit = F.call_function("getbit", word, F.pmod(idx, F.lit(64)).cast("int"))
+            test = test & (bit == 1)
+        return test
+
+    def np_test(self, words: np.ndarray, cdf: pd.DataFrame) -> np.ndarray:
+        """The same k bit tests in numpy over one shard's uint64 words."""
+        idx = _indices(cdf["h1"].to_numpy(), cdf["h2"].to_numpy(), self.k, self.bits)
+        hit = (words[idx >> 6] >> (idx & 63).astype(np.uint64)) & np.uint64(1)
+        return hit.astype(bool).all(axis=1)
+
+    def empty(self, spark: SparkSession) -> DataFrame:
+        return empty_bloom(spark, self.n_partitions, self.bits)
+
+    def insert(
+        self, uris: DataFrame, table: DataFrame, uri_col: str = "uri",
+        pid_expr: F.Column | None = None, delta_only: bool = False,
+    ) -> DataFrame:
+        return bloom_insert(
+            uris, table, uri_col, self.k, self.bits, self.n_partitions,
+            pid_expr, delta_only,
+        )
+
+
 def bloom_params(expected_n: int, fpp: float = 0.01, n_partitions: int = 64):
-    """(n_partitions, bits_per_partition, k). bits rounded to 64.
+    """BloomParams(n_partitions, bits_per_partition, k). bits rounded to 64.
 
     Sizing assumes UNIFORM load across shards.  With ``host_salt_pid``
     sharding, one shard carries a whole (host, salt) slice of the seen
@@ -71,7 +148,7 @@ def bloom_params(expected_n: int, fpp: float = 0.01, n_partitions: int = 64):
     total_bits = max(4096, int(-expected_n * math.log(fpp) / (math.log(2) ** 2)))
     bits = ((total_bits // n_partitions) + 63) // 64 * 64
     k = max(1, round(math.log(2) * total_bits / max(1, expected_n)))
-    return n_partitions, bits, min(k, 16)
+    return BloomParams(n_partitions, bits, min(k, 16))
 
 
 def census_shard_loads(
@@ -115,7 +192,7 @@ def bloom_params_auto(
     n_salts: int = 8, n_sub: int = 1,
     host_col: str = "host", n_col: str = "n",
 ):
-    """(n_partitions, bits_per_partition, k) sized so the HOTTEST shard —
+    """BloomParams sized so the HOTTEST shard —
     not the mean one — stays at nominal FPP.
 
     ``bloom_params`` assumes uniform shard load; under host_salt_pid
@@ -143,9 +220,11 @@ def empty_bloom(spark: SparkSession, n_partitions: int, bits: int) -> DataFrame:
 
 
 def salt_col(uri_col: str = "uri", n_salts: int = 8) -> F.Column:
-    """The politeness salt — a pure function of the canonical uri, shared
-    by the scheduling pipeline (sched_pipeline.py re-exports this) and the
-    (host, salt)-derived filter-shard pid below."""
+    """The politeness salt — a pure function of the canonical uri, the one
+    definition behind politeness.schedule, the scheduling pipeline
+    (sched_pipeline.py re-exports this) and the (host, salt)-derived
+    filter-shard pid below (census_shard_loads enumerates its values and
+    must hash them the same way)."""
     return F.pmod(F.xxhash64(F.lit("sched"), F.col(uri_col)), F.lit(n_salts))
 
 
@@ -184,33 +263,9 @@ def host_salt_pid(
     return F.pmod(F.xxhash64(*key), F.lit(n_partitions)).cast("int")
 
 
-def _with_hashes(
-    df: DataFrame, uri_col: str, n_partitions: int, pid_expr: F.Column | None = None
-) -> DataFrame:
-    """JVM-side hashing: partition id + the two reduced index hashes.
-
-    ``pid_expr`` overrides the shard id (default: uri hash).  Insert and
-    probe must use the SAME pid function for a given filter table; the
-    bit positions (h1/h2) are pid-independent, so the pid only chooses
-    which shard owns a uri's bits."""
-    c = F.col(uri_col)
-    pid = (
-        pid_expr
-        if pid_expr is not None
-        else F.pmod(F.xxhash64(F.lit("pid"), c), F.lit(n_partitions)).cast("int")
-    )
-    return (
-        df.withColumn("pid", pid)
-        .withColumn("h1", F.pmod(F.xxhash64(F.lit("h1"), c), F.lit(_H31)))
-        .withColumn(
-            "h2", F.pmod(F.xxhash64(F.lit("h2"), c), F.lit(_H31)).bitwiseOR(F.lit(1))
-        )
-    )
-
-
 def _indices(h1: np.ndarray, h2: np.ndarray, k: int, bits: int) -> np.ndarray:
     """(len, k) bit indices; mirrors the Catalyst expression exactly.
-    h1/h2 arrive already reduced to 31 bits by _with_hashes, so
+    h1/h2 arrive already reduced to 31 bits by with_hashes, so
     h1 + i*h2 < 2^36 — no overflow in either engine."""
     ks = np.arange(k, dtype=np.int64)
     return (
@@ -218,65 +273,95 @@ def _indices(h1: np.ndarray, h2: np.ndarray, k: int, bits: int) -> np.ndarray:
     ) % np.int64(bits)
 
 
+def cogroup_regime(params) -> bool:
+    """True when the filter is too big to broadcast (the 10^10 sizing):
+    the one probe-regime choice, for either kind."""
+    return params.nbytes > BROADCAST_BLOOM_MAX_BYTES
+
+
+def table_params(table: DataFrame, n_partitions: int, size: int, k: int = 0):
+    """The params of filter ``table``, whose own column names its kind:
+    ``buckets`` is cuckoo (``size`` = buckets per shard), ``words`` Bloom
+    (``size`` = bits per shard, ``k`` hashes)."""
+    if "buckets" in table.columns:
+        from webindex_spark.operators.cuckoo import CuckooParams
+
+        return CuckooParams(n_partitions, size)
+    return BloomParams(n_partitions, size, k)
+
+
+def np_member(params, cdf: pd.DataFrame, tdf: pd.DataFrame) -> np.ndarray:
+    """The kind's numpy membership test of one cogrouped shard's hashed
+    candidates ``cdf`` against its filter row ``tdf`` (none: all False)."""
+    if len(tdf) == 0:
+        return np.zeros(len(cdf), dtype=bool)
+    table = np.asarray(tdf[params.column].iloc[0], dtype=np.int64).view(np.uint64)
+    return params.np_test(table, cdf)
+
+
+def touched_shards(table: DataFrame, cand: DataFrame) -> DataFrame:
+    """The rows of filter ``table`` that the hashed batch ``cand`` lands
+    on: a broadcast semi-join on pid, so the table is scanned, never
+    shuffled — the input of an O(delta) (``delta_only``) insert."""
+    return table.join(F.broadcast(cand.select("pid").distinct()), "pid", "left_semi")
+
+
+def filter_probe(
+    candidates: DataFrame, table: DataFrame, uri_col: str, params,
+    pid_expr: F.Column | None = None,
+) -> DataFrame:
+    """candidates + boolean ``maybe_seen``. Physical mode by filter size."""
+    if cogroup_regime(params):
+        return _probe_cogroup(candidates, table, uri_col, params, pid_expr)
+    return _probe_jvm(candidates, table, uri_col, params, pid_expr)
+
+
 def bloom_probe(
     candidates: DataFrame, bloom: DataFrame, uri_col: str, k: int, bits: int,
     n_partitions: int, pid_expr=None,
 ) -> DataFrame:
-    """candidates + boolean ``maybe_seen``. Physical mode by filter size."""
-    if n_partitions * (bits // 8) <= BROADCAST_BLOOM_MAX_BYTES:
-        return _bloom_probe_jvm(
-            candidates, bloom, uri_col, k, bits, n_partitions, pid_expr
-        )
-    return _bloom_probe_cogroup(
-        candidates, bloom, uri_col, k, bits, n_partitions, pid_expr
+    """filter_probe of a Bloom table."""
+    return filter_probe(
+        candidates, bloom, uri_col, BloomParams(n_partitions, bits, k), pid_expr
     )
 
 
-def _bloom_probe_jvm(
-    candidates: DataFrame, bloom: DataFrame, uri_col: str, k: int, bits: int,
-    n_partitions: int, pid_expr=None,
+def _probe_jvm(
+    candidates: DataFrame, table: DataFrame, uri_col: str, params,
+    pid_expr: F.Column | None = None,
 ) -> DataFrame:
-    """Pure-Catalyst probe: broadcast join on pid + k getbit tests in
+    """Pure-Catalyst probe: broadcast join on pid + the kind's test in
     codegen.  No shuffle (broadcast), no Python."""
-    cand = _with_hashes(candidates, uri_col, n_partitions, pid_expr)
-    j = cand.join(F.broadcast(bloom), "pid", "left")
-    test = F.lit(True)
-    for i in range(k):
-        idx = F.pmod(F.col("h1") + F.lit(i) * F.col("h2"), F.lit(bits))
-        word = F.element_at(F.col("words"), F.shiftright(idx, 6).cast("int") + 1)
-        bit = F.call_function("getbit", word, F.pmod(idx, F.lit(64)).cast("int"))
-        test = test & (bit == 1)
-    maybe = F.when(F.col("words").isNull(), F.lit(False)).otherwise(test)
-    return j.withColumn("maybe_seen", maybe).drop("pid", "h1", "h2", "words")
+    cand = params.with_hashes(candidates, uri_col, pid_expr)
+    j = cand.join(F.broadcast(table), "pid", "left")
+    maybe = F.when(F.col(params.column).isNull(), F.lit(False)).otherwise(
+        params.jvm_test()
+    )
+    return j.withColumn("maybe_seen", maybe).drop(
+        "pid", *params.hash_cols, params.column
+    )
 
 
-def _bloom_probe_cogroup(
-    candidates: DataFrame, bloom: DataFrame, uri_col: str, k: int, bits: int,
-    n_partitions: int, pid_expr=None,
+def _probe_cogroup(
+    candidates: DataFrame, table: DataFrame, uri_col: str, params,
+    pid_expr: F.Column | None = None,
 ) -> DataFrame:
     """Shuffle-cogroup probe for filters too large to broadcast."""
-    cand = _with_hashes(candidates, uri_col, n_partitions, pid_expr)
-    out_schema = T.StructType(
-        [f for f in cand.schema.fields if f.name not in ("h1", "h2")]
-        + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-    cols = [f.name for f in cand.schema.fields if f.name not in ("h1", "h2")]
+    cand = params.with_hashes(candidates, uri_col, pid_expr)
+    fields = [f for f in cand.schema.fields if f.name not in params.hash_cols]
+    cols = [f.name for f in fields]
 
-    def probe(key, cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        if len(bdf) == 0:
-            res = np.zeros(len(cdf), dtype=bool)
-        else:
-            words = np.asarray(bdf["words"].iloc[0], dtype=np.int64).view(np.uint64)
-            idx = _indices(cdf["h1"].to_numpy(), cdf["h2"].to_numpy(), k, bits)
-            hit = (words[idx >> 6] >> (idx & 63).astype(np.uint64)) & np.uint64(1)
-            res = hit.astype(bool).all(axis=1)
+    def probe(key, cdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
         out = cdf[cols].copy()
-        out["maybe_seen"] = res
+        out["maybe_seen"] = np_member(params, cdf, tdf)
         return out
 
+    out_schema = T.StructType(
+        fields + [T.StructField("maybe_seen", T.BooleanType(), False)]
+    )
     return (
         cand.groupBy("pid")
-        .cogroup(bloom.groupBy("pid"))
+        .cogroup(table.groupBy("pid"))
         .applyInPandas(probe, schema=out_schema)
         .drop("pid")
     )
@@ -295,22 +380,19 @@ def bloom_insert(
     set of (host, salt) shards; recomputing and rewriting the other
     ~n_partitions bitmap rows every epoch is O(filter) write volume per
     tick (the reference touches only dirtied buckets,
-    UriCombineQ.java:87-90).  The touched slice is selected with a
-    broadcast semi-join on the batch's pids, so the filter table is
-    scanned, never shuffled; the caller commits the result as a
-    ``mode="merge"`` snapshot keyed on pid (read() reconciles
-    max-sequence per shard) and unions it with the untouched rows when
-    it needs the full filter in the same job (frontier.run_epoch).
+    UriCombineQ.java:87-90).  The touched slice is ``touched_shards``;
+    the caller commits the result as a ``mode="merge"`` snapshot keyed
+    on pid (read() reconciles max-sequence per shard) and unions it with
+    the untouched rows when it needs the full filter in the same job
+    (frontier.run_epoch).
 
     ``uris`` may carry extra columns (e.g. host, when ``pid_expr``
     derives the shard from it); only pid/h1/h2 feed the kernel."""
-    cand = _with_hashes(uris, uri_col, n_partitions, pid_expr).select(
-        "pid", "h1", "h2"
-    )
+    cand = BloomParams(n_partitions, bits, k).with_hashes(
+        uris, uri_col, pid_expr
+    ).select("pid", "h1", "h2")
     if delta_only:
-        bloom = bloom.join(
-            F.broadcast(cand.select("pid").distinct()), "pid", "left_semi"
-        )
+        bloom = touched_shards(bloom, cand)
 
     def insert(key, cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(key[0])
@@ -333,31 +415,34 @@ def bloom_insert(
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: DataFrame | None,
+    table: DataFrame | None,
     uri_col: str = "uri",
     *,
-    k: int,
-    bits: int,
-    n_partitions: int,
-    pid_expr=None,
+    params,
+    pid_expr: F.Column | None = None,
+    mat: Materializer | None = None,
 ) -> DataFrame:
-    """The two-tier unseen filter.
+    """The two-tier unseen filter, for either filter kind (``params``).
 
-    Definitely-new candidates (Bloom miss) pass straight through; only the
-    maybe-seen slice pays the anti-join against the exact seen table.
-    Without a bloom (None) everything takes the exact tier.
+    Definitely-new candidates (filter miss) pass straight through; only
+    the maybe-seen slice pays the anti-join against the exact seen table.
+    Without a filter table (None) everything takes the exact tier.
+
+    Both union branches read the probe.  The broadcast regime's JVM probe
+    recomputes for free.  The cogroup regime's Python kernel is cut
+    through ``mat``, the caller's ``Materializer`` scope, so the cut is
+    released with the caller's unit of work (without one, an unowned
+    ``Materializer()`` whose cut the context cleaner reclaims).  One job
+    stores the cut at once, as an eager cut does: left lazy, the two
+    branches' tasks of one shard can run at once on two executors and
+    each run the kernel.
     """
-    if bloom is None:
+    if table is None:
         return candidates.join(seen.select(uri_col), uri_col, "left_anti")
-    probed = bloom_probe(
-        candidates, bloom, uri_col, k, bits, n_partitions, pid_expr
-    )
-    if n_partitions * (bits // 8) > BROADCAST_BLOOM_MAX_BYTES:
-        # cogroup mode runs Python: EAGER-materialize so the two union
-        # branches below don't each recompute the probe kernel (a lazy
-        # checkpoint only saves blocks after the first job — within that
-        # job both branch stages run the kernel)
-        probed = probed.localCheckpoint(eager=True)
+    probed = filter_probe(candidates, table, uri_col, params, pid_expr)
+    if cogroup_regime(params):
+        probed = (mat or Materializer())(probed)
+        probed.write.format("noop").mode("overwrite").save()
     fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
     confirmed_new = maybe.join(seen.select(uri_col), uri_col, "left_anti")

@@ -327,31 +327,24 @@ def _sched_world(spark: SparkSession, sf_dir: str):
 
 
 def _run_sched_cogroup(spark, sf_dir, filter_kind: str) -> DataFrame:
+    from webindex_spark.operators import cuckoo as cuckoo_ops
     from webindex_spark.operators import sched_pipeline
     from webindex_spark.operators import seen as seen_ops
 
     cand, robots, seen = _sched_world(spark, sf_dir)
+    # the cuckoo is sized for the sf0.1 seen set (~25k) with
+    # (host,salt)-shard skew headroom — unlike Bloom, an overloaded cuckoo
+    # shard raises rather than degrading, so the gate sizes for the
+    # largest sf it runs at (bloom_params docstring discusses the same
+    # skew math)
     if filter_kind == "cuckoo":
-        from webindex_spark.operators import cuckoo as cuckoo_ops
-
-        # sized for the sf0.1 seen set (~25k) with (host,salt)-shard skew
-        # headroom — unlike Bloom, an overloaded cuckoo shard raises
-        # rather than degrading, so the gate sizes for the largest sf it
-        # runs at (bloom_params docstring discusses the same skew math)
-        n_parts, m = cuckoo_ops.cuckoo_params(60_000, 8)
-        k, bits = 0, m
-        pid = seen_ops.host_salt_pid("host", "uri", 4, n_parts)
-        filt = cuckoo_ops.cuckoo_insert(
-            seen, cuckoo_ops.empty_cuckoo(spark, n_parts, m),
-            "uri", m, n_parts, pid_expr=pid,
-        )
+        params = cuckoo_ops.cuckoo_params(60_000, 8)
+        k, size = 0, params.m
     else:
-        n_parts, bits, k = seen_ops.bloom_params(2_000, 0.01, 8)
-        pid = seen_ops.host_salt_pid("host", "uri", 4, n_parts)
-        filt = seen_ops.bloom_insert(
-            seen, seen_ops.empty_bloom(spark, n_parts, bits),
-            "uri", k, bits, n_parts, pid_expr=pid,
-        )
+        params = seen_ops.bloom_params(2_000, 0.01, 8)
+        k, size = params.k, params.bits
+    pid = seen_ops.host_salt_pid("host", "uri", 4, params.n_partitions)
+    filt = params.insert(seen, params.empty(spark), "uri", pid_expr=pid)
     # force the cogroup branch (the build-time mode decision models a
     # filter past the broadcast cap); restore the cap after construction
     old = seen_ops.BROADCAST_BLOOM_MAX_BYTES
@@ -359,8 +352,8 @@ def _run_sched_cogroup(spark, sf_dir, filter_kind: str) -> DataFrame:
     try:
         out = sched_pipeline.schedule_frontier(
             cand, seen, filt, robots, budget=7, n_salts=4,
-            k=k, bits=bits, n_partitions=n_parts, num_partitions=16,
-            filter_kind=filter_kind,
+            k=k, bits=size, n_partitions=params.n_partitions,
+            num_partitions=16,
         )
     finally:
         seen_ops.BROADCAST_BLOOM_MAX_BYTES = old
@@ -375,7 +368,7 @@ def q_unseen_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two-tier unseen filter through the BROADCAST regime's JVM
     probe: a small Bloom (under the broadcast cap) probed with pure
     Catalyst expressions (element_at + shifts in whole-stage codegen,
-    seen._bloom_probe_jvm), fresh rows passing free and the maybe slice
+    seen._probe_jvm), fresh rows passing free and the maybe slice
     taking the exact anti-join.  The filter tier is semantically
     invisible (no false negatives + exact tier), so the oracle is the
     plain NOT IN — which is exactly the property this gate certifies
@@ -384,14 +377,10 @@ def q_unseen_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webindex_spark.operators import seen as seen_ops
 
     cand, _robots, seen = _sched_world(spark, sf_dir)
-    n_parts, bits, k = seen_ops.bloom_params(5_000, 0.01, 8)
-    bloom = seen_ops.bloom_insert(
-        seen.select("uri"), seen_ops.empty_bloom(spark, n_parts, bits),
-        "uri", k, bits, n_parts,
-    )
+    params = seen_ops.bloom_params(5_000, 0.01, 8)
+    bloom = params.insert(seen.select("uri"), params.empty(spark))
     out = seen_ops.filter_unseen(
-        cand, seen.select("uri"), bloom, "uri",
-        k=k, bits=bits, n_partitions=n_parts,
+        cand, seen.select("uri"), bloom, "uri", params=params
     )
     return out.select("uri", "host", "priority")
 
