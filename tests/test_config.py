@@ -61,15 +61,19 @@ def test_from_env_and_crawl_config(tmp_path, monkeypatch):
     p = tmp_path / "engine.yml"
     p.write_text(
         "budget: 7\nfilterKind: cuckoo\nbloomExpectedN: 4096\n"
-        "bloomPartitions: 4\ncompactEvery: 3\n"
+        "bloomPartitions: 4\n"
     )
     monkeypatch.setenv("WEBINDEX_SPARK_CONFIG", str(p))
     cfg = WebIndexConfig.from_env()
     cc = cfg.to_crawl_config()
     assert cc.budget == 7 and cc.filter_kind == "cuckoo"
-    assert cc.compact_every == 3
     assert type(cc.bloom) is cuckoo.CuckooParams
     assert cc.bloom == cuckoo.cuckoo_params(4096, 4)
+    # compaction is no knob: the commit folds every two-segment chain
+    (tmp_path / "old.yml").write_text("budget: 7\ncompactEvery: 3\n")
+    monkeypatch.setenv("WEBINDEX_SPARK_CONFIG", str(tmp_path / "old.yml"))
+    with pytest.raises(ValueError, match="compactEvery"):
+        WebIndexConfig.from_env()
     monkeypatch.delenv("WEBINDEX_SPARK_CONFIG")
     monkeypatch.delenv("WI_HOME", raising=False)
     assert WebIndexConfig.from_env() is None

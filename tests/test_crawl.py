@@ -47,12 +47,8 @@ def run_model(corpus_pd, images_pd, robots_pd, seeds_pd, n_epochs=N_EPOCHS):
 
 
 def crawl_cfg():
-    # compact_every=0: the fixture locks the RAW merge-chain shapes
-    # (per-epoch merge segments, O(delta) manifests); compaction-on
-    # equality has its own test below
     return frontier_ops.CrawlConfig(
         budget=BUDGET, bloom_expected_n=5000, bloom_partitions=8,
-        compact_every=0,
     )
 
 
@@ -174,6 +170,12 @@ def test_metrics_manifest(spark, crawled):
     assert man["lineage"]["frontier"] == N_EPOCHS - 1
 
 
+def _frozen(df):
+    # index_pages and bloom carry array columns: freeze them to hash
+    return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.collect()}
+
+
 def _assert_same_crawl(spark, cat, cat_full):
     """Every table's epoch history and rows equal the uninterrupted run's:
     nothing was committed twice and no completed epoch was re-executed."""
@@ -182,13 +184,7 @@ def _assert_same_crawl(spark, cat, cat_full):
             [m["epoch"] for m in cat.table(t).history()]
             == [m["epoch"] for m in cat_full.table(t).history()]
         ), t
-        # index_pages carries its outbound_links array: freeze it to hash
-        a, b = (
-            {tuple(tuple(v) if isinstance(v, list) else v for v in r)
-             for r in c.table(t).read(spark).collect()}
-            for c in (cat, cat_full)
-        )
-        assert a == b, t
+        assert _frozen(cat.table(t).read(spark)) == _frozen(cat_full.table(t).read(spark)), t
 
 
 @pytest.mark.parametrize(
@@ -304,16 +300,16 @@ MERGE_TABLES = (
 def test_resume_after_compaction_crash(
     spark, world, tmp_path_factory, crawled, monkeypatch, failed
 ):
-    """The epoch's compactions run overlapped after the frontier commit:
-    one failing compaction is raised only once the others have drained,
-    names its table, and leaves the epoch done — the resumed crawl does
-    not re-run it, and merge-on-read of the uncompacted chain keeps the
-    final state equal to the uninterrupted run."""
+    """The epoch's compactions run overlapped after its commits: one
+    failing compaction is raised only once the others have drained, names
+    its table, and leaves the epoch done — the resumed crawl does not
+    re-run it.  The failed table's epoch-3 commit finds its chain still
+    long and compacts it, and the final state equals the uninterrupted
+    run."""
     corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
     cat_full, _ = crawled
     cat = Catalog(str(tmp_path_factory.mktemp("crawl_compact_kill")))
     cfg = crawl_cfg()
-    cfg.compact_every = 2
     frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, 1, cfg)
 
     real_compact = SnapshotTable.compact
@@ -336,36 +332,46 @@ def test_resume_after_compaction_crash(
     snap_before = cat.table("frontier").head()
     frontier_ops.run_crawl(spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg)
     history = cat.table("frontier").history()
-    # one data commit per epoch, plus epoch 2's compaction if it survived
+    # one data commit per epoch, plus one compaction: epoch 2's if it
+    # survived, else the one epoch 3's commit made
     assert [m["epoch"] for m in history if not m.get("compaction")] == [0, 1, 2, 3]
-    assert len(history) == 4 + (failed != "frontier")
-    assert cat.table("frontier").head() == snap_before + 1
+    assert len(history) == 5
+    assert cat.table("frontier").head() == snap_before + 1 + (failed == "frontier")
+    for t in MERGE_TABLES:
+        man = cat.table(t).manifest()
+        assert man["epoch"] == 3, t
+        assert man.get("compaction", False) is (t == failed), t
 
     for t in ("seen", "fetch_log", *MERGE_TABLES):
-        a, b = (
-            {tuple(tuple(v) if isinstance(v, list) else v for v in r)
-             for r in c.table(t).read(spark).collect()}
-            for c in (cat, cat_full)
-        )
-        assert a == b, t
+        assert _frozen(cat.table(t).read(spark)) == _frozen(cat_full.table(t).read(spark)), t
 
 
 def test_crawl_with_compaction_identical(spark, world, tmp_path_factory, crawled):
-    """compact_every folds each mutating table's merge chain back to one
-    segment inside the epoch loop; the crawl outcome (frontier, seen,
-    uri_counts, fetch_log) must be byte-identical to the uncompacted run,
-    every mutating HEAD must actually be a compaction commit, and the
-    compactions keep the epochs' meters."""
+    """The epoch commit folds each mutating table's merge chain back to
+    one segment once it holds two merge segments, i.e. at every even
+    epoch: each compaction reads equal to the merge snapshot it folds,
+    the crawl outcome (frontier, seen, uri_counts, fetch_log) equals the
+    fixture run's at the same epoch, every mutating HEAD after an even
+    epoch is a compaction commit, and the compactions keep the epochs'
+    meters."""
     corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
     cat_plain, _ = crawled
     cat = Catalog(str(tmp_path_factory.mktemp("crawl_compact")))
     cfg = crawl_cfg()
-    cfg.compact_every = 1
+    n_epochs = N_EPOCHS + 1
     meters = frontier_ops.run_crawl(
-        spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg
+        spark, cat, corpus, images, robots, seeds, n_epochs, cfg
     )
+    for t in frontier_ops.TABLES:
+        history = cat.table(t).history()
+        compactions = [m for m in history if m.get("compaction")]
+        assert [m["epoch"] for m in compactions] == (
+            [2, 4] if t in MERGE_TABLES else []), t
+        for m in compactions:
+            assert _frozen(cat.table(t).read(spark, m["snapshot"])) == _frozen(
+                cat.table(t).read(spark, m["parent"])), (t, m["epoch"])
     for t in ("frontier", "seen", "uri_counts", "fetch_log", "domain_counts"):
-        a = {tuple(r) for r in cat.table(t).read(spark).collect()}
+        a = {tuple(r) for r in cat.table(t).read_before_epoch(spark, n_epochs).collect()}
         b = {tuple(r) for r in cat_plain.table(t).read(spark).collect()}
         assert a == b, t
     for t in ("frontier", "uri_counts", "index_rows"):
@@ -376,20 +382,26 @@ def test_crawl_with_compaction_identical(spark, world, tmp_path_factory, crawled
     # every HEAD is a compaction: a run over the finished catalog still
     # reports each epoch's own meters
     assert frontier_ops.run_crawl(
-        spark, cat, corpus, images, robots, seeds, N_EPOCHS, cfg
+        spark, cat, corpus, images, robots, seeds, n_epochs, cfg
     ) == meters
 
 
 def test_bloom_odelta_merge_commits(spark, crawled):
     """The filter table commits O(delta): every post-init bloom snapshot
-    is mode="merge" keyed on pid carrying ONLY the shards that epoch's
-    uris touched, and the reconciled read-back equals a from-scratch
-    full insert of the final seen set (bitwise-OR order independence)."""
+    other than a compaction is mode="merge" keyed on pid and adds ONLY
+    the one segment of shards that epoch's uris touched to its parent's
+    chain, and the reconciled read-back equals a from-scratch full insert
+    of the final seen set (bitwise-OR order independence)."""
     cat, model = crawled
     t = cat.table("bloom")
-    man = t.manifest()
-    assert man["mode"] == "merge" and man["merge_keys"] == ["pid"]
-    assert len(man["merge_segments"]) == N_EPOCHS  # one delta per epoch
+    history = t.history()
+    by_id = {m["snapshot"]: m for m in history}
+    deltas = [m for m in history[1:] if not m.get("compaction")]
+    assert [m["epoch"] for m in deltas] == list(range(1, N_EPOCHS + 1))  # one per epoch
+    for man in deltas:
+        assert man["mode"] == "merge" and man["merge_keys"] == ["pid"]
+        parent_chain = by_id[man["parent"]].get("merge_segments") or []
+        assert man["merge_segments"] == [*parent_chain, man["segments"][-1]], man["epoch"]
     got = {r["pid"]: tuple(r["words"]) for r in t.read(spark).collect()}
     cfg = crawl_cfg()
     seen_df = cat.table("seen").read(spark).select("uri")

@@ -44,18 +44,16 @@ def test_modes_match_what_run_epoch_commits(spark, tmp_path):
     robots = spark.createDataFrame(synth.gen_robots_pandas(4, 1))
     seeds = spark.createDataFrame(synth.gen_seeds_pandas(4, seeds_per_host=1))
     cat = Catalog(str(tmp_path / "cat"))
-    # compact_every=0: the assertion reads the RAW commit modes; the
-    # default policy's compaction commit would sit on top of them
-    cfg = fr.CrawlConfig(
-        budget=2, bloom_expected_n=1_000, bloom_partitions=4, compact_every=0
-    )
+    cfg = fr.CrawlConfig(budget=2, bloom_expected_n=1_000, bloom_partitions=4)
     fr.run_crawl(spark, cat, corpus, images, robots, seeds, 2, cfg)
     for t in fr.TABLES:
-        mode = cat.table(t).manifest().get("mode")
+        # the RAW commit: epoch 2's compaction sits on top of the merge ones
+        man = [m for m in cat.table(t).history() if not m.get("compaction")][-1]
+        assert man["epoch"] == 2, t
+        mode = man.get("mode")
         want = iceberg_sql.LOCAL_COMMIT_MODES[t]
         assert mode == want, (t, mode, want)
         if want == "merge":
             # a merge commit must carry its key columns + delta segments
-            man = cat.table(t).manifest()
             assert man.get("merge_keys"), t
             assert man.get("merge_segments"), t

@@ -153,3 +153,59 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     page_stream.apply_page_batch(spark, cat, pages, batch_id=0)
     assert {t: cat.table(t).head() for t in page_stream.STREAM_TABLES} == heads
     assert _snap(cat.table("uri_counts").read(spark)) == before
+
+
+def test_chains_fold_and_a_lost_compaction_is_redone(spark, tmp_path, monkeypatch):
+    """Every second micro-batch folds each table's merge chain, so no HEAD
+    holds more than two merge segments.  A compaction that fails inside
+    ``apply_page_batch`` raises only after the others have drained, names
+    its table and leaves the batch done (a replay is a no-op); the next
+    batch's commit compacts that table, and the streamed state still
+    equals a batch recompute."""
+    fixture = os.path.join(os.path.dirname(__file__), "golden", "5-pages.txt")
+    lines = [l for l in open(fixture, encoding="utf-8").read().splitlines() if l]
+    files = []
+    for b, chunk in enumerate((lines[:2], lines[2:3], lines[3:4], lines[4:])):
+        files.append(tmp_path / f"p{b}.json")
+        files[-1].write_text("\n".join(chunk) + "\n")
+    cat = Catalog(str(tmp_path / "cat"))
+    page_stream._empty_state(spark, cat)
+
+    def heads():
+        return {t: cat.table(t).head() for t in page_stream.STREAM_TABLES}
+
+    def batch(b):
+        page_stream.apply_page_batch(
+            spark, cat, read_pages_json(spark, str(files[b])), batch_id=b
+        )
+        for t in page_stream.STREAM_TABLES:
+            assert len(cat.table(t).manifest().get("merge_segments") or []) <= 2, (t, b)
+
+    batch(0)
+    failed = "index_rows"
+    real_compact = SnapshotTable.compact
+
+    def dying_compact(self, spark_):
+        if self.name == failed:
+            raise RuntimeError("simulated kill in compaction")
+        return real_compact(self, spark_)
+
+    monkeypatch.setattr(SnapshotTable, "compact", dying_compact)
+    with pytest.raises(RuntimeError, match="simulated kill") as err:
+        batch(1)
+    monkeypatch.setattr(SnapshotTable, "compact", real_compact)
+    assert any(failed in n for n in getattr(err.value, "__notes__", []))
+    for t in page_stream.STREAM_TABLES:  # the others drained before the raise
+        assert cat.table(t).manifest().get("compaction", False) is (t != failed), t
+    assert cat.done(page_stream.STREAM_TABLES, 1)
+    before = heads()
+    batch(1)  # replay of a done batch
+    assert heads() == before
+
+    batch(2)
+    man = cat.table(failed).manifest()
+    assert man.get("compaction") is True and man["epoch"] == 2
+    batch(3)
+    for t in page_stream.STREAM_TABLES:
+        assert any(m.get("compaction") for m in cat.table(t).history()), t
+    _assert_equals_batch(spark, cat, read_pages_json(spark, str(tmp_path / "p*.json")))

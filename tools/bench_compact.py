@@ -1,23 +1,30 @@
-"""compact_every tradeoff sweep (round-5 verdict ask 7).
+"""Why ``snapshots.COMPACT_AT_MERGE_SEGMENTS`` is 2 (round-5 verdict ask 7).
 
 Merge-mode commits keep each epoch O(delta), but the segment chain grows
 one data segment (plus tombstone keys) per epoch and every reconciled
 read pays the merge-on-read join over the whole chain.  ``compact()``
-folds the chain to one segment at O(state) cost.  This sweeps the policy
-knob: N epochs of realistic uri_counts ticks (touched-slice semi ->
-merge_uri_counts -> merge commit, 100k-row deltas against 10M-row state)
-under compact_every in {0, 2, 5, 10}, measuring
+folds the chain to one segment at O(state) cost.  ``Catalog.commit_epoch``
+folds a chain once it holds ``COMPACT_AT_MERGE_SEGMENTS`` merge segments;
+this script measures that fold point.  It runs N epochs of realistic
+uri_counts ticks (touched-slice semi -> merge_uri_counts -> merge commit,
+100k-row deltas against 10M-row state), folding at 2, 5 or 10 merge
+segments or never, and records
 
   * tick_secs   — per-epoch update+commit (includes the state read the
                   touched-slice semi performs, so read amplification
                   shows up HERE, where the crawl actually pays it);
-  * compact_secs — the amortized fold cost when the policy fires;
+  * compact_secs — the amortized fold cost when the chain is folded;
   * read_secs   — a full reconciled read-back per epoch (the query-side
                   price, e.g. the webserver or an export job).
 
+The recorded run (BENCH/compact_r05.json, taken when the fold point was
+an every-N-epochs setting, which is the same thing at one merge segment
+per epoch) put the per-epoch total at 4.84 s folding at 2 against 8.03
+at 5, 11.6 at 10 and 10.66 never, so the package folds at 2 and has no
+setting for it.
+
 Usage: python tools/bench_compact.py [--quick]
-Emits one JSON line; the chosen default + rationale land in
-BENCH/BASELINE.md.
+Emits one JSON line.
 """
 
 from __future__ import annotations
@@ -54,10 +61,10 @@ def epoch_delta(spark, n_delta, e):
     ).localCheckpoint(eager=True)
 
 
-def run_policy(spark, root, state_df, n_epochs, n_delta, every):
+def run_policy(spark, root, state_df, n_epochs, n_delta, fold_at):
     from webindex_spark.operators import delta as delta_ops
 
-    cat = Catalog(os.path.join(root, f"ce-{every}"))
+    cat = Catalog(os.path.join(root, f"fold-{fold_at}"))
     t = cat.table("uri_counts")
     t.commit(state_df, epoch=0)
     ticks, compacts, reads = [], [], []
@@ -71,7 +78,7 @@ def run_policy(spark, root, state_df, n_epochs, n_delta, every):
         ups, keys, dels = delta_ops.uri_counts_commit(changes)
         t.commit(ups, epoch=e, mode="merge", merge_keys=keys, deletes=dels)
         ticks.append(time.monotonic() - t0)
-        if every and e % every == 0:
+        if fold_at and len(t.manifest()["merge_segments"]) >= fold_at:
             t0 = time.monotonic()
             t.compact(spark)
             compacts.append(time.monotonic() - t0)
@@ -81,7 +88,7 @@ def run_policy(spark, root, state_df, n_epochs, n_delta, every):
     n, h = _count_hash(t.read(spark))
     r = lambda xs: round(sum(xs) / max(1, len(xs)), 2)  # noqa: E731
     return {
-        "compact_every": every,
+        "fold_at_segments": fold_at,
         "avg_tick_secs": r(ticks), "last_tick_secs": round(ticks[-1], 2),
         "n_compactions": len(compacts),
         "avg_compact_secs": r(compacts),
@@ -103,7 +110,7 @@ def main():
     root = tempfile.mkdtemp(prefix="compact-", dir=base)
     spark = get_spark("bench-compact", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
-    out = {"metric": "compact_every_sweep", "state_rows": state_n,
+    out = {"metric": "compaction_point_sweep", "state_rows": state_n,
            "delta_rows": n_delta, "n_epochs": n_epochs, "results": []}
     try:
         state = gen_uri_counts(spark, state_n).localCheckpoint(eager=True)
@@ -111,11 +118,11 @@ def main():
         run_policy(spark, root, gen_uri_counts(spark, 100_000)
                    .localCheckpoint(eager=True), 2, 5_000, 0)
         hashes = set()
-        for every in (0, 2, 5, 10):
-            res = run_policy(spark, root, state, n_epochs, n_delta, every)
+        for fold_at in (0, 2, 5, 10):
+            res = run_policy(spark, root, state, n_epochs, n_delta, fold_at)
             hashes.add((res["rows"], res["content_hash"]))
             out["results"].append(res)
-            print(f"# compact_every={every}: tick {res['avg_tick_secs']}s "
+            print(f"# fold at {fold_at or 'never'} segments: tick {res['avg_tick_secs']}s "
                   f"(last {res['last_tick_secs']}), read {res['avg_read_secs']}s "
                   f"(last {res['last_read_secs']}), compact x{res['n_compactions']} "
                   f"avg {res['avg_compact_secs']}s, per-epoch total "

@@ -96,7 +96,6 @@ def configure(config_path: str, app_props_path: str, catalog_dir: str,
         "webindex.numTablets": cfg.numTablets,
         "webindex.budget": cfg.budget,
         "webindex.filterKind": cfg.filterKind,
-        "webindex.compactEvery": cfg.compactEvery,
     }
     with open(app_props_path, "a", encoding="utf-8") as f:
         for k, v in derived.items():

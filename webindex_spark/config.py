@@ -45,7 +45,6 @@ class WebIndexConfig:
     bloomFpp: float = 0.01
     bloomPartitions: int = 16
     metricPartitions: int = 16
-    compactEvery: int = 2  # measured default (tools/bench_compact.py sweep)
 
     @classmethod
     def load(cls, config_path: str) -> "WebIndexConfig":
@@ -102,5 +101,4 @@ class WebIndexConfig:
             bloom_fpp=self.bloomFpp,
             bloom_partitions=self.bloomPartitions,
             metric_partitions=self.metricPartitions,
-            compact_every=self.compactEvery,
         )

@@ -19,7 +19,8 @@ done epochs, and an epoch job reads its *inputs* pinned below epoch e
 (``SnapshotTable.read_before_epoch``), so a killed run re-runs only the
 interrupted epoch (same inputs => same outputs, published tables are
 skipped) and never refetches completed epochs: the Iceberg-snapshot
-checkpoint contract of BASELINE.json, on the snapshots seam.
+checkpoint contract of BASELINE.json, on the snapshots seam.  The same
+commit compacts each merge chain at its second segment: every even epoch.
 
 Physical note: this loop schedules the ALREADY-deduped frontier (robots +
 politeness only — no seen join needed there) and unseen-filters the newly
@@ -122,18 +123,6 @@ class CrawlConfig:
     bloom_fpp: float = 0.01
     bloom_partitions: int = 16
     metric_partitions: int = 16    # per-partition metric granularity
-    # fold each mutating table's merge-on-read segment chain back to one
-    # segment every N epochs (0 = never).  Keeps per-epoch commits
-    # O(delta) while bounding read amplification at O(state/N) amortized
-    # per epoch — the LSM/Iceberg rewrite_data_files tradeoff.  Default 2
-    # from the measured sweep (tools/bench_compact.py, BENCH/BASELINE.md):
-    # at 10M state / 100k deltas the per-epoch total (tick + amortized
-    # fold + reconciled read) is 4.8 s at N=2 vs 8.0 at N=5 and 10.7
-    # uncompacted — merge-on-read amplification costs more than the fold
-    # well before 5 segments, and both sides scale with state so the
-    # ratio carries.  Set 0 when a deployment compacts out-of-band
-    # (Iceberg maintenance jobs).
-    compact_every: int = 2
     # the seen tier's filter (the table is "bloom" for either kind): its
     # params object supplies the kind's parts (empty, insert)
     bloom: seen_ops.BloomParams | cuckoo_ops.CuckooParams = field(init=False)
@@ -148,10 +137,11 @@ class CrawlConfig:
         )
 
 
-def canonicalize(raw_urls: DataFrame, url_col: str = "url") -> DataFrame:
-    """raw url strings -> valid canonical rows (uri, url, host, path,
-    is_image), invalid dropped (URL.isValid semantics)."""
-    p = raw_urls.withColumn("__p", parse_url(F.col(url_col)))
+def canonicalize(raw_urls: DataFrame) -> DataFrame:
+    """raw ``url`` strings -> valid canonical rows (uri, url, host, path,
+    is_image, then the other columns), invalid dropped (URL.isValid
+    semantics)."""
+    p = raw_urls.withColumn("__p", parse_url(F.col("url")))
     return (
         p.where(F.col("__p.valid"))
         .select(
@@ -160,7 +150,7 @@ def canonicalize(raw_urls: DataFrame, url_col: str = "url") -> DataFrame:
             F.col("__p.host").alias("host"),
             F.col("__p.path").alias("path"),
             F.col("__p.is_image").alias("is_image"),
-            *[c for c in raw_urls.columns if c != url_col],
+            *[c for c in raw_urls.columns if c != "url"],
         )
     )
 
@@ -266,7 +256,7 @@ def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlCo
     partial init commits only the tables a kill left missing."""
     if cat.done(INIT_TABLES, 0):
         return  # already initialized: never rebuild the empty filter
-    cand = canonicalize(seeds, "url")
+    cand = canonicalize(seeds)
     frontier = (
         cand.groupBy("uri")
         .agg(
@@ -340,11 +330,14 @@ def run_epoch(
             .join(images, "image_id", "inner")
         )
 
-        # 4. link extraction -> canonical candidates (priority = parent*decay)
-        out_raw = fetched_pages.select(
-            F.col("priority"), F.explode("out_urls").alias("url")
-        )
-        children = canonicalize(out_raw, "url").select(
+        # 4. link extraction: each fetched link is canonicalized once, and
+        #    the cut feeds both the candidates (priority = parent*decay) and
+        #    the index deltas' outbound links (step 7)
+        links = mat(canonicalize(fetched_pages.select(
+            F.col("uri").alias("page_uri"), "priority",
+            F.explode("out_urls").alias("url"),
+        )))
+        children = links.select(
             "uri", "url", "host", "path", "is_image",
             (F.col("priority") * cfg.priority_decay).alias("priority"),
         )
@@ -417,10 +410,7 @@ def run_epoch(
         #    delta cascade (operators/delta.py, T1-T5) — the one chain the
         #    stream micro-batch and the IndexIT tests run too.  index_rows is
         #    never read: its merge commit comes from delta-sized inputs only.
-        ex = fetched_pages.select(
-            F.col("uri").alias("page_uri"), F.explode("out_urls").alias("url")
-        )
-        link_structs = canonicalize(ex, "url").select(
+        link_structs = links.select(
             "page_uri",
             F.struct(
                 F.col("url"), F.col("uri"), F.lit("").alias("anchor_text")
@@ -500,7 +490,6 @@ def run_epoch(
         }
         cat.commit_epoch(
             spark, epoch, outputs,
-            compact=bool(cfg.compact_every) and epoch % cfg.compact_every == 0,
             lineage={t: epoch - 1 for t in TABLES}, metrics=metrics,
             partition_metrics=part_metrics,
         )

@@ -29,7 +29,8 @@ properties the resume logic relies on:
     before anything is written;
   * **one epoch commit** (``Catalog.commit_epoch``): a crawl epoch or a
     stream micro-batch publishes all its tables in one overlapped commit,
-    done once every table's HEAD carries the epoch (``Catalog.done``).
+    done once every table's HEAD carries the epoch (``Catalog.done``),
+    then compacts each merge chain that reached two segments.
 
 This mirrors the role Fluo's MVCC transactions + sequenced export queue
 play in the reference (PageObserver.java:72-124, IndexClient.java:250-306):
@@ -49,6 +50,15 @@ from functools import partial, reduce
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# A merge table whose HEAD chain holds this many merge segments is folded
+# back to one segment by the commit that made it.  2 from the measured
+# sweep (tools/bench_compact.py, BENCH/compact_r05.json): at 10M state /
+# 100k deltas the per-epoch total (tick + amortized fold + reconciled
+# read) is 4.84 s folding at 2 segments vs 8.03 at 5, 11.6 at 10 and
+# 10.66 never — merge-on-read amplification costs more than the fold well
+# before 5 segments, and both sides scale with state so the ratio carries.
+COMPACT_AT_MERGE_SEGMENTS = 2
 
 
 def overlapped(calls: dict) -> None:
@@ -214,7 +224,7 @@ class SnapshotTable:
         frontier, index_rows, index_pages) avoid the O(state)-per-epoch
         rewrite the reference's Fluo CFM also avoids by touching only
         dirtied buckets (UriCombineQ.java:87-90).  ``compact()`` folds
-        the chain back to one segment when read amplification grows.
+        the chain back to one segment (``Catalog.commit_epoch`` decides when).
 
         Either way the write lands in a scratch dir first, is renamed to
         its immutable location, the manifest is written, and only then
@@ -396,13 +406,13 @@ class Catalog:
         heads = [self.table(t).epoch_of_head() for t in tables]
         return all(e is not None and e >= epoch for e in heads)
 
-    def commit_epoch(self, spark: SparkSession, epoch: int, outputs: dict, *,
-                     compact: bool = False, **manifest) -> None:
+    def commit_epoch(self, spark: SparkSession, epoch: int, outputs: dict,
+                     **manifest) -> None:
         """Commit ``{table: (df, mode, merge_keys, deletes)}`` as ``epoch``
         with the shared ``manifest`` kwargs, overlapped in dict order, then
-        (``compact``) compact the merge tables, overlapped.  Tables already
-        ``done`` are skipped, so a replay of a crashed epoch (inputs pinned
-        by ``read_before_epoch``) publishes only the tables left behind."""
+        compact the chains at ``COMPACT_AT_MERGE_SEGMENTS``, overlapped.
+        Tables already ``done`` are skipped, so a replay of a crashed epoch
+        (inputs pinned by ``read_before_epoch``) publishes only the rest."""
         todo = {t: out for t, out in outputs.items() if not self.done([t], epoch)}
 
         def commit(name, df, mode, merge_keys, deletes):
@@ -412,6 +422,8 @@ class Catalog:
                      deletes=deletes, **manifest)
 
         overlapped({t: partial(commit, t, *out) for t, out in todo.items()})
-        if compact:  # same epoch, same rows: a crash here leaves the epoch done
-            overlapped({t: partial(self.table(t).compact, spark)
-                        for t, out in todo.items() if out[1] == "merge"})
+        # same epoch, same rows: a crash here leaves the epoch done, and the
+        # table's next commit finds the chain still long and folds it then
+        due = [t for t in map(self.table, outputs) if len(
+            t.manifest().get("merge_segments", [])) >= COMPACT_AT_MERGE_SEGMENTS]
+        overlapped({t.name: partial(t.compact, spark) for t in due})

@@ -15,6 +15,9 @@ loop uses, arranged the Structured Streaming way:
     of a crashed micro-batch a no-op for tables that already published —
     the same epoch commit ``run_epoch`` makes.
 
+The same call compacts every chain at its second merge segment, so a
+batch reads at most two per table however long the stream runs.
+
 The invariant the tests lock: after any sequence of micro-batches, the
 streamed state equals a from-scratch batch build over all pages seen so
 far (the reference's IndexIT equivalence, continuously).
@@ -75,8 +78,9 @@ def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
         # (BlockManager block-level locking makes the race compute-once).
         # Submitted in STREAM_TABLES order, which measured faster than the
         # cascade's: the FIFO scheduler serves earlier-submitted jobs first.
-        # All four have drained when commit_epoch returns or raises, so the
-        # scope's exit releases the cut frames after their last reader.
+        # All four, and any compactions after them, have drained when
+        # commit_epoch returns or raises, so the scope's exit releases the
+        # cut frames after their last reader.
         cat.commit_epoch(
             spark, batch_id,
             {t: (outputs[t][0], "merge", *outputs[t][1:]) for t in STREAM_TABLES},
